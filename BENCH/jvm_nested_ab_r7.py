@@ -46,32 +46,19 @@ def main() -> None:
         base = ev.select(F.col("event_id"), reps).select(
             (F.col("event_id") * REPL + F.col("_r")).alias("event_id"))
 
-        dns_in = base.select(
-            "event_id",
-            F.col("event_id").cast("decimal(20,0)").alias("id_dec"),
-            F.array(
-                F.concat(F.lit("h"), F.col("event_id").cast("string"),
-                         F.lit(".example")),
-                F.concat(F.lit("alt"), F.col("event_id").cast("string")),
-            ).alias("q_names"),
-            F.array((F.col("event_id") % 16).cast("int"),
-                    F.lit(28)).alias("q_types"),
-            F.array(F.lit(1),
-                    (F.col("event_id") % 3).cast("int")).alias("q_classes"),
-        )
-        PW.dns_questions_roundtrip(dns_in).select("payload") \
-            .repartition(64).write.mode("overwrite") \
+        from logstash_codec_protobuf_spark.queries import _dns_questions_msg
+
+        e = F.col("event_id")
+        PW.wire_encode(base, _dns_questions_msg(e), "dns_message") \
+            .select("payload").repartition(64).write.mode("overwrite") \
             .parquet(f"{stage}/dns")
-        con_in = base.select(
-            "event_id",
-            F.concat(F.lit("c"), F.col("event_id").cast("string"))
-            .alias("c_name"),
-            F.array(F.lit("home"), F.lit("work")).alias("c_labels"),
-            F.array((F.col("event_id") % 1000).cast("int"),
-                    (F.col("event_id") % 97).cast("int")).alias("c_numbers"),
-        )
-        PW.contact_roundtrip(con_in).select("payload") \
-            .repartition(64).write.mode("overwrite") \
+        contact = F.struct(
+            F.concat(F.lit("c"), e.cast("string")).alias("name"),
+            F.create_map(F.lit("home"), (e % 1000).cast("int"),
+                         F.lit("work"), (e % 97).cast("int"))
+            .alias("phone_numbers"))
+        PW.wire_encode(base, contact, "contact") \
+            .select("payload").repartition(64).write.mode("overwrite") \
             .parquet(f"{stage}/contact")
 
         dns_pay = spark.read.parquet(f"{stage}/dns")
@@ -81,55 +68,24 @@ def main() -> None:
 
         def dns_case(impl):
             def run():
-                if impl == "jvm_dynamic":
-                    dec = PW.decode_message_wire_jvm_dynamic(
-                        dns_pay, "dns_message")
-                    d = F.col("decoded")
-                    out = dec.select(
-                        F.posexplode(d["question"]).alias("pos", "q"),
-                        d["error"].alias("e"))
-                    out.selectExpr(
-                        "sum(q.qtype + q.qclass + length(q.name))",
-                        "count_if(e is not null)", "count(1)").collect()
-                else:
-                    reg = PW.default_registry()
-                    dec = dns_pay.withColumn(
-                        "decoded",
-                        PW._make_dns_questions_decode_udf(reg)(
-                            F.col("payload")))
-                    d = F.col("decoded")
-                    out = dec.select(
-                        F.posexplode(d["questions"]).alias("pos", "q"),
-                        d["error"].alias("e"))
-                    out.selectExpr(
-                        "sum(q.qtype + q.qclass + length(q.name))",
-                        "count_if(e is not null)", "count(1)").collect()
+                d = F.col("decoded")
+                PW.decode_message_wire(dns_pay, "dns_message", impl=impl) \
+                    .select(F.posexplode(d["question"]).alias("pos", "q"),
+                            d["error"].alias("e")) \
+                    .selectExpr("sum(q.qtype + q.qclass + length(q.name))",
+                                "count_if(e is not null)",
+                                "count(1)").collect()
             return run
 
         def con_case(impl):
             def run():
-                if impl == "jvm_dynamic":
-                    dec = PW.decode_message_wire_jvm_dynamic(
-                        con_pay, "contact")
-                    d = F.col("decoded")
-                    out = dec.select(
-                        F.explode(d["phone_numbers"]).alias("ph"),
-                        d["error"].alias("e"))
-                    out.selectExpr(
-                        "sum(ph.value + length(ph.key))",
-                        "count_if(e is not null)", "count(1)").collect()
-                else:
-                    reg = PW.default_registry()
-                    dec = con_pay.withColumn(
-                        "decoded",
-                        PW._make_contact_decode_udf(reg)(F.col("payload")))
-                    d = F.col("decoded")
-                    out = dec.select(
-                        F.explode(d["phones"]).alias("ph"),
-                        d["error"].alias("e"))
-                    out.selectExpr(
-                        "sum(ph.number + length(ph.label))",
-                        "count_if(e is not null)", "count(1)").collect()
+                d = F.col("decoded")
+                PW.decode_message_wire(con_pay, "contact", impl=impl) \
+                    .select(F.explode(d["phone_numbers"]).alias("ph"),
+                            d["error"].alias("e")) \
+                    .selectExpr("sum(ph.value + length(ph.key))",
+                                "count_if(e is not null)",
+                                "count(1)").collect()
             return run
 
         cases = {

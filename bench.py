@@ -639,16 +639,15 @@ def run_wiredecode_ab(sf_dir: str, sf: str) -> dict:
         # warm both paths (python worker pool + codegen)
         decode_run("arrow"); decode_run("arrow_scalar"); floor_run()
         if jvm_ok:
-            decode_run("jvm_dynamic"); decode_run("jvm_json")
+            decode_run("jvm_dynamic")
         vec, scal, vec_rt, scal_rt, floor = [], [], [], [], []
-        jvm, jvm_js, jvm_rt = [], [], []
+        jvm, jvm_rt = [], []
         for _ in range(n_ab):
             floor.append(_timed(floor_run))
             vec.append(_timed(lambda: decode_run("arrow")))
             scal.append(_timed(lambda: decode_run("arrow_scalar")))
             if jvm_ok:
                 jvm.append(_timed(lambda: decode_run("jvm_dynamic")))
-                jvm_js.append(_timed(lambda: decode_run("jvm_json")))
                 jvm_rt.append(_timed(lambda: roundtrip_run("jvm_dynamic")))
             vec_rt.append(_timed(lambda: roundtrip_run("arrow")))
             scal_rt.append(_timed(lambda: roundtrip_run("arrow_scalar")))
@@ -659,8 +658,6 @@ def run_wiredecode_ab(sf_dir: str, sf: str) -> dict:
             report.update({
                 "decode_jvm_dynamic_sec": [round(x, 3) for x in jvm],
                 "decode_jvm_dynamic_median": round(med(jvm), 3),
-                "decode_jvm_json_sec": [round(x, 3) for x in jvm_js],
-                "decode_jvm_json_median": round(med(jvm_js), 3),
                 "roundtrip_jvm_dynamic_sec": [round(x, 3) for x in jvm_rt],
                 "roundtrip_jvm_dynamic_median": round(med(jvm_rt), 3),
                 "decode_payloads_per_sec_jvm_dynamic": round(

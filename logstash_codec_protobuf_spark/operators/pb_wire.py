@@ -1,4 +1,4 @@
-"""Protobuf binary wire-format decode (and the turn_wire encode template).
+"""Protobuf binary wire-format decode and encode.
 
 This is the engine's re-expression of the reference codec's real hot path:
 ``@pb_builder.decode(data)`` (protobuf.rb:212-218) consuming actual varint /
@@ -7,25 +7,34 @@ producing them.
 
 Split of labor, Spark-first:
 
-- **Encode** stays 100% JVM-side: ``functions.wire`` renders the message as
-  pure column arithmetic (hex string -> ``unhex`` -> BinaryType). No Python
-  worker; fuses into whole-stage codegen; bit-exact DuckDB oracle.
-- **Decode** is genuinely non-relational (variable-length fields, arbitrary
-  field order, unknown-field skipping, nested recursion) — the sanctioned
-  Arrow-batched pandas UDF path (SURVEY.md §2.11). One Python worker exchange
-  per batch, ~10^4 payloads per round trip, never per-row SQL UDFs. On a
-  cluster with the spark-protobuf jar, ``decode_turn_wire(impl='auto')``
-  swaps in JVM-native ``from_protobuf`` with a descriptor set compiled from
-  the registry (``descriptors.descriptor_set_bytes``) — zero Python workers;
-  the sandbox ships no jar, so the Arrow path is what runs here, validated
-  against hand-computed vectors from the protobuf encoding spec.
+- **turn_wire encode** stays 100% JVM-side: ``functions.wire`` renders the
+  message as pure column arithmetic (hex string -> ``unhex`` ->
+  BinaryType). No Python worker; fuses into whole-stage codegen; bit-exact
+  DuckDB oracle.
+- **turn_wire decode** is genuinely non-relational (variable-length
+  fields, arbitrary field order, unknown-field skipping) — the sanctioned
+  Arrow-batched pandas UDF path (SURVEY.md §2.11). One Python worker
+  exchange per batch, ~10^4 payloads per round trip, never per-row SQL
+  UDFs. On a cluster with the spark-protobuf jar,
+  ``decode_turn_wire(impl='auto')`` swaps in JVM-native ``from_protobuf``
+  with a descriptor set compiled from the registry
+  (``descriptors.descriptor_set_bytes``) — zero Python workers; without the
+  jar the Arrow path runs, validated against hand-computed vectors from the
+  protobuf encoding spec.
+- **Every other registered message** goes through ONE generic pair, like
+  the reference's single descriptor walk: ``wire_encode`` (a struct column
+  shaped like the message -> ``py_encode`` per row) and
+  ``decode_message_wire`` (-> one registry-typed ``decoded`` struct, from
+  ``py_decode`` in an Arrow batch or from the vendored JVM
+  ``DynamicMessage`` harness). Queries project fixture shapes from that
+  struct with Column ops.
 
 Wire parser semantics mirrored from the reference:
 - unknown fields are skipped by wire type (forward compatibility),
 - pb3 enums decode to NAMES, pb2 to ints (protobuf.rb:330-331); codes are
   int32-truncated like protobuf-java, and an UNREGISTERED pb3 code decodes
   to its decimal string (type-stable forward compatibility — identical
-  across the arrow, vector, jvm_dynamic and jvm_json impls),
+  across the arrow, vector and jvm_dynamic impls),
 - proto3 defaults are emitted for absent scalars (protobuf.rb:297),
 - the oneof discriminator is whichever member was last seen on the wire —
   recorded as metadata, value preserved even when it equals the default
@@ -511,10 +520,12 @@ def py_encode(value: dict, registry: SchemaRegistry, message: str,
     - message fields are emitted whenever non-None (explicit presence),
     - repeated varint/enum fields use proto3 PACKED encoding; repeated
       strings/bytes/messages emit one tag per element,
-    - maps emit one {1: key, 2: value} entry message per item.
+    - maps emit one {1: key, 2: value} entry message per item,
+    - google.protobuf.Struct fields take a JSON-shaped dict and are emitted
+      whenever non-None.
     """
     from ..functions.wire import (
-        py_field_len, py_field_varint, py_varint,
+        py_field_len, py_field_varint, py_struct, py_varint,
     )
 
     spec = registry.messages[message]
@@ -572,6 +583,10 @@ def py_encode(value: dict, registry: SchemaRegistry, message: str,
         if f.type.startswith("message:"):
             out += py_field_len(num, py_encode(v, registry, f.type[8:],
                                                proto_version))
+            continue
+        if f.type == "struct":
+            # google.protobuf.Struct: explicit presence, like a message
+            out += py_field_len(num, py_struct(v))
             continue
         kind = _scalar_kind(f.type)
         if kind == "varint":
@@ -881,43 +896,15 @@ def decode_turn_wire_jvm(df: DataFrame, payload_col: str = "payload",
         F.lit(None).cast("string").alias("error"),
     ))
     schema = TURN_WIRE_DECODED if proto_version == 3 else TURN_WIRE_DECODED_PB2
-    return (
-        df.withColumn("_pb", raw)
-        .withColumn(
-            "decoded",
-            F.coalesce(
-                decoded.cast(schema),
-                F.struct(*[
-                    (F.lit(WIRE_ERROR) if f.name == "error"
-                     else F.lit(None)).cast(f.dataType).alias(f.name)
-                    for f in schema
-                ]),
-            ),
-        )
-        .drop("_pb")
-    )
+    return (df.withColumn("_pb", raw)
+            .withColumn("decoded", _or_dead_letter(decoded, schema))
+            .drop("_pb"))
 
 
 _JVM_WIRE_JAR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "jvm", "sparkgraft-jvm-wire.jar",
 )
-_JVM_WIRE_UDF = "sg_pb_decode_json"
-
-# from_json schema for the canonical protobuf JSON the JVM decoder prints:
-# int64-family values arrive as JSON STRINGS (proto3 JSON spec), enums as
-# names (pb3) or ints (pb2) — both land in a string column and cast after.
-_TURN_WIRE_JSON = T.StructType([
-    T.StructField("conv_id", T.StringType()),
-    T.StructField("turn_idx", T.IntegerType()),
-    T.StructField("role", T.StringType()),
-    T.StructField("tool", T.StringType()),
-    T.StructField("colour", T.StringType()),
-    T.StructField("cents", T.StringType()),
-    T.StructField("horn", T.IntegerType()),
-    T.StructField("wings", T.IntegerType()),
-    T.StructField("msg", T.StringType()),
-])
 
 
 def jvm_dynamic_available(spark) -> bool:
@@ -978,22 +965,6 @@ def _register_java_udf(spark, name: str, cls_name: str,
         spark.udf.registerJavaFunction(name, cls_name, return_type)
 
 
-def _ensure_jvm_wire_udf(spark) -> None:
-    """Idempotently ADD JAR the vendored harness and register the
-    JSON-variant Java UDF.
-
-    ``ADD JAR`` puts the jar on the session's shared classloader (drivers
-    and executors alike), after which class resolution works — no
-    session-construction config needed, so the path works on sessions the
-    engine did not itself create (e.g. the correctness driver's)."""
-    if getattr(spark, "_sg_jvm_wire_registered", False):
-        return
-    spark.sql(f"ADD JAR '{_JVM_WIRE_JAR}'")
-    _register_java_udf(spark, _JVM_WIRE_UDF,
-                       "org.sparkgraft.WireDecodeJson", T.StringType())
-    spark._sg_jvm_wire_registered = True
-
-
 _JVM_ROW_TYPES = {
     "string": T.StringType(), "int32": T.IntegerType(),
     "sint32": T.IntegerType(), "int64": T.LongType(),
@@ -1003,6 +974,9 @@ _JVM_ROW_TYPES = {
     # unsigned widths widen exactly like the Arrow decoder's columns
     "uint32": T.LongType(), "fixed32": T.LongType(),
     "uint64": T.DecimalType(20, 0), "fixed64": T.DecimalType(20, 0),
+    # google.protobuf.Struct: canonical sorted-key JSON (arrow impl only —
+    # the descriptor compiler has no well-known-type imports)
+    "struct": T.StringType(),
 }
 
 
@@ -1018,33 +992,43 @@ def _jvm_scalar_type(ftype: str, proto_version: int) -> T.DataType:
 
 def _jvm_row_schema(spec, proto_version: int,
                     registry: SchemaRegistry | None = None,
-                    _stack: tuple[str, ...] = ()) -> T.StructType:
-    """The StructType WireDecodeRow returns for ``spec``, RECURSIVELY: wire
-    fields in descriptor order (what ``Descriptor.getFields()`` yields for
-    the set ``descriptors.descriptor_set_bytes`` emits) — nested singular
-    messages as nested structs, repeated fields as arrays, ``map<k,v>``
-    fields as ``array<struct<key,value>>`` in first-seen key order — then
-    one ``oneof_<group>`` string slot per oneof. Raises for RECURSIVE
-    message graphs (unicorn, human): a cycle has no finite StructType, so
-    callers route those to the Arrow decoder (which depth-bounds them via
-    ``max_recursion_depth``)."""
+                    _stack: tuple[str, ...] = (),
+                    depth: int | None = None) -> T.StructType:
+    """The registry-typed ``decoded`` shape of ``spec`` (without ``error``)
+    — what WireDecodeRow returns and what the Arrow impl of
+    ``decode_message_wire`` builds, RECURSIVELY: wire fields in descriptor
+    order (what ``Descriptor.getFields()`` yields for the set
+    ``descriptors.descriptor_set_bytes`` emits) — nested singular messages
+    as nested structs, repeated fields as arrays, ``map<k,v>`` fields as
+    ``array<struct<key,value>>`` in first-seen key order — then one
+    ``oneof_<group>`` string slot per oneof.
+
+    ``depth=None`` (jvm_dynamic) raises for RECURSIVE message graphs
+    (unicorn, human): a cycle has no finite StructType. An integer ``depth``
+    (the Arrow impl's ``max_recursion_depth``) unrolls instead: message
+    fields below ``depth`` nested levels are dropped, and ``py_decode``
+    dead-letters any payload that would fill them with DEPTH_ERROR."""
     reg = registry if registry is not None else default_registry()
-    if spec.name in _stack:
+    if depth is None and spec.name in _stack:
         raise NotImplementedError(
             f"jvm_dynamic: recursive message type {spec.name} "
             f"(via {' -> '.join(_stack)}) has no finite struct schema — "
             "use the arrow impl")
     stack = _stack + (spec.name,)
+    sub_depth = None if depth is None else depth - 1
     fields = []
     groups: list[str] = []
     for _num, f in spec.wire_fields():
         if f.type.startswith("message:"):
+            if depth is not None and depth <= 0:
+                continue
             t: T.DataType = _jvm_row_schema(
-                reg.messages[f.type[8:]], proto_version, reg, stack)
+                reg.messages[f.type[8:]], proto_version, reg, stack,
+                sub_depth)
         elif f.type.startswith("map<"):
             kt, vt = (s.strip() for s in f.type[4:-1].split(",", 1))
             vtype = (_jvm_row_schema(reg.messages[vt[8:]], proto_version,
-                                     reg, stack)
+                                     reg, stack, sub_depth)
                      if vt.startswith("message:")
                      else _jvm_scalar_type(vt, proto_version))
             t = T.ArrayType(T.StructType([
@@ -1085,7 +1069,7 @@ def _ensure_jvm_row_udf(spark, message: str, proto_version: int,
 
 
 def _jvm_wire_cfg(reg: SchemaRegistry, proto_version: int,
-                  message: str = "turn_wire") -> str:
+                  message: str) -> str:
     from ..descriptors import descriptor_set_bytes
 
     dialect = "pb3" if proto_version == 3 else "pb2"
@@ -1097,167 +1081,17 @@ def _jvm_wire_cfg(reg: SchemaRegistry, proto_version: int,
             + f"|sparkgraft.{message}|" + dialect)
 
 
-def decode_turn_wire_jvm_dynamic(df: DataFrame, payload_col: str = "payload",
-                                 registry: SchemaRegistry | None = None,
-                                 proto_version: int = 3) -> DataFrame:
-    """JVM-side decode with ZERO Python workers, runnable WITHOUT the
-    spark-protobuf jar: a vendored Java UDF (``jvm/src/.../WireDecodeRow``,
-    compiled against the protobuf-java runtime the Spark Connect jar ships
-    shaded) parses the wire bytes with ``DynamicMessage`` against the same
-    compiled FileDescriptorSet the ``from_protobuf`` path uses
-    (``descriptors.descriptor_set_bytes``) and returns the struct row
-    directly — no Arrow exchange, no JSON detour (reference hot loop:
-    protobuf.rb:212-218).
-
-    Dialect parity with the Arrow decoder: pb3 symbolizes enums and emits
-    proto3 defaults (no-presence ``getField``); pb2 passes enum codes
-    through as ints. Parse failures return NULL from the UDF -> the
-    PERMISSIVE dead-letter error row, original bytes preserved.
-
-    A canonical-JSON variant (``WireDecodeJson`` + ``from_json``) rides in
-    the same jar as ``impl='jvm_json'`` — the A/B foil that prices the
-    JSON print/parse detour this path avoids."""
-    reg = registry if registry is not None else default_registry()
-    spec = reg.messages["turn_wire"]
-    row_schema = _jvm_row_schema(spec, proto_version)
-    name = _ensure_jvm_row_udf(df.sparkSession, "turn_wire", proto_version,
-                               row_schema)
-    cfg = _jvm_wire_cfg(reg, proto_version)
-
-    out = df.withColumn(
-        "_pb", F.call_udf(name, F.col(payload_col), F.lit(cfg))
-    )
-    p = F.col("_pb")
-    decoded = F.when(p.isNull(), F.lit(None)).otherwise(
-        F.struct(
-            *[p[f.name].alias(f.name) for f in row_schema.fields],
-            F.lit(None).cast("string").alias("error"),
-        )
-    )
-    schema = TURN_WIRE_DECODED if proto_version == 3 else TURN_WIRE_DECODED_PB2
-    return (
-        out.withColumn(
-            "decoded",
-            F.coalesce(
-                decoded.cast(schema),
-                F.struct(*[
-                    (F.lit(WIRE_ERROR) if f.name == "error"
-                     else F.lit(None)).cast(f.dataType).alias(f.name)
-                    for f in schema
-                ]),
-            ),
-        )
-        .drop("_pb")
-    )
-
-
-def decode_message_wire_jvm_dynamic(df: DataFrame, message: str,
-                                    payload_col: str = "payload",
-                                    registry: SchemaRegistry | None = None,
-                                    proto_version: int = 3) -> DataFrame:
-    """Generic JVM-side wire decode for ANY registered non-recursive message
-    (round-6 verdict item 3: the jvm_dynamic path previously refused
-    repeated/message/map fields). ``WireDecodeRow`` walks the
-    ``DynamicMessage`` recursively — repeated fields to arrays, nested
-    singular messages to nested structs, proto3 maps to
-    ``array<struct<key,value>>`` entries collapsed last-wins in first-seen
-    key order (a Python dict built in wire order, matching ``py_decode``) —
-    the exact shape the reference's recursive walk emits
-    (protobuf.rb:287-336; DNS repeated nested structs
-    spec/codecs/pb3_decode_spec.rb:172-241). Zero Python workers.
-
-    Returns ``df`` plus a ``decoded`` struct: the message's fields in
-    descriptor order, ``oneof_<group>`` slots, then ``error`` (NULL on
-    success; parse failures dead-letter with WIRE_ERROR, bytes kept).
-    Recursive types (unicorn, human) raise NotImplementedError — the Arrow
-    decoder with ``max_recursion_depth`` is the path for those."""
-    reg = registry if registry is not None else default_registry()
-    spec = reg.messages[message]
-    row_schema = _jvm_row_schema(spec, proto_version, reg)
-    name = _ensure_jvm_row_udf(df.sparkSession, message, proto_version,
-                               row_schema)
-    cfg = _jvm_wire_cfg(reg, proto_version, message)
-
-    out = df.withColumn(
-        "_pb", F.call_udf(name, F.col(payload_col), F.lit(cfg))
-    )
-    p = F.col("_pb")
-    schema = T.StructType(
-        list(row_schema.fields)
-        + [T.StructField("error", T.StringType())]
-    )
-    decoded = F.when(p.isNull(), F.lit(None)).otherwise(
-        F.struct(
-            *[p[f.name].alias(f.name) for f in row_schema.fields],
-            F.lit(None).cast("string").alias("error"),
-        )
-    )
-    return (
-        out.withColumn(
-            "decoded",
-            F.coalesce(
-                decoded.cast(schema),
-                F.struct(*[
-                    (F.lit(WIRE_ERROR) if f.name == "error"
-                     else F.lit(None)).cast(f.dataType).alias(f.name)
-                    for f in schema
-                ]),
-            ),
-        )
-        .drop("_pb")
-    )
-
-
-def decode_turn_wire_jvm_json(df: DataFrame, payload_col: str = "payload",
-                              registry: SchemaRegistry | None = None,
-                              proto_version: int = 3) -> DataFrame:
-    """The canonical-JSON variant of the vendored JVM path: the
-    ``WireDecodeJson`` UDF prints protobuf canonical JSON and Catalyst's
-    ``from_json`` lands the struct. Still zero Python workers, but pays a
-    JSON print+parse detour per row — kept as the A/B foil and as the
-    shape a jar-less cluster would use if it needed the canonical-JSON
-    contract itself (e.g. sinking decoded events as JSON strings)."""
-    reg = registry if registry is not None else default_registry()
-    cfg = _jvm_wire_cfg(reg, proto_version)
-    _ensure_jvm_wire_udf(df.sparkSession)
-
-    out = df.withColumn(
-        "_pbjson",
-        F.call_udf(_JVM_WIRE_UDF, F.col(payload_col), F.lit(cfg)),
-    ).withColumn("_pb", F.from_json(F.col("_pbjson"), _TURN_WIRE_JSON))
-    p = F.col("_pb")
-    colour = (p["colour"].cast("long") if proto_version == 2
-              else p["colour"])
-    decoded = F.when(F.col("_pbjson").isNull(), F.lit(None)).otherwise(
-        F.struct(
-            p["conv_id"].alias("conv_id"),
-            p["turn_idx"].alias("turn_idx"),
-            p["role"].alias("role"), p["tool"].alias("tool"),
-            colour.alias("colour"),
-            p["cents"].cast("long").alias("cents"),
-            p["horn"].alias("horn"),
-            p["wings"].alias("wings"),
-            p["msg"].alias("msg"),
-            F.when(p["horn"].isNotNull(), F.lit("horn"))
-             .when(p["wings"].isNotNull(), F.lit("wings"))
-             .alias("oneof_body"),
-            F.lit(None).cast("string").alias("error"),
-        )
-    )
-    schema = TURN_WIRE_DECODED if proto_version == 3 else TURN_WIRE_DECODED_PB2
-    return (
-        out.withColumn(
-            "decoded",
-            F.coalesce(
-                decoded.cast(schema),
-                F.struct(*[
-                    (F.lit(WIRE_ERROR) if f.name == "error"
-                     else F.lit(None)).cast(f.dataType).alias(f.name)
-                    for f in schema
-                ]),
-            ),
-        )
-        .drop("_pb").drop("_pbjson")
+def _or_dead_letter(decoded: Column, schema: T.StructType) -> Column:
+    """``decoded`` cast to ``schema``, or — where it is NULL (the JVM
+    decoders' parse-failure signal) — the dead-letter row: every field NULL
+    and ``error`` = WIRE_ERROR."""
+    return F.coalesce(
+        decoded.cast(schema),
+        F.struct(*[
+            (F.lit(WIRE_ERROR) if f.name == "error"
+             else F.lit(None)).cast(f.dataType).alias(f.name)
+            for f in schema
+        ]),
     )
 
 
@@ -1274,7 +1108,7 @@ def decode_turn_wire(df: DataFrame, payload_col: str = "payload",
     Arrow-batch UDF (numpy record-transposed walker for flat messages);
     'jvm'/'arrow' force a path; 'jvm_dynamic' forces the vendored
     DynamicMessage harness (JVM-side, zero Python workers, no
-    spark-protobuf jar needed — see ``decode_turn_wire_jvm_dynamic``);
+    spark-protobuf jar needed — ``decode_message_wire``'s JVM impl);
     'arrow_scalar' forces the per-payload Python loop inside the Arrow UDF
     (bench A/B + parity foil).
 
@@ -1282,27 +1116,25 @@ def decode_turn_wire(df: DataFrame, payload_col: str = "payload",
     config (protobuf.rb:110-116, spec/codecs/pb3_decode_spec.rb:347-452 —
     whose DEFAULT is false): when disabled the chosen-member discriminator
     column is nulled; member values themselves always decode."""
-    if impl not in ("auto", "jvm", "jvm_dynamic", "jvm_json", "arrow",
-                    "arrow_scalar"):
+    if impl not in ("auto", "jvm", "jvm_dynamic", "arrow", "arrow_scalar"):
         raise ValueError(f"unknown decode impl: {impl}")
+    schema = TURN_WIRE_DECODED if proto_version == 3 else TURN_WIRE_DECODED_PB2
     if impl == "jvm" or (
         impl == "auto" and spark_protobuf_available(df.sparkSession)
     ):
         out = decode_turn_wire_jvm(df, payload_col, registry, proto_version)
     elif impl == "jvm_dynamic":
-        out = decode_turn_wire_jvm_dynamic(df, payload_col, registry,
-                                           proto_version)
-    elif impl == "jvm_json":
-        out = decode_turn_wire_jvm_json(df, payload_col, registry,
-                                        proto_version)
+        # the registry shape of turn_wire has the same field names, in the
+        # same order, as TURN_WIRE_DECODED; only widths differ
+        out = decode_message_wire(df, "turn_wire", payload_col, registry,
+                                  proto_version, impl="jvm_dynamic")
+        out = out.withColumn("decoded", F.col("decoded").cast(schema))
     else:
         udf = _make_decode_udf(registry if registry is not None
                                else default_registry(), proto_version,
                                vectorized=(impl != "arrow_scalar"))
         out = df.withColumn("decoded", udf(F.col(payload_col)))
     if not oneof_metainfo:
-        schema = (TURN_WIRE_DECODED if proto_version == 3
-                  else TURN_WIRE_DECODED_PB2)
         out = out.withColumn("decoded", F.struct(*[
             (F.lit(None).cast("string") if f.name == "oneof_body"
              else F.col("decoded")[f.name]).alias(f.name)
@@ -1312,361 +1144,173 @@ def decode_turn_wire(df: DataFrame, payload_col: str = "payload",
 
 
 # ---------------------------------------------------------------------------
-# unicorn: nested message + packed repeated enums/ints on the wire
-# (spec/helpers/pb3/unicorn_pb.rb:7-18; spec/codecs/pb3_decode_spec.rb:78-136)
+# the generic wire codec: any registered message, one registry-typed shape
+# (the reference has no per-message code either — one descriptor walk to
+# decode, protobuf.rb:287-336, one serialize_to_string to encode,
+# protobuf.rb:635-636)
 # ---------------------------------------------------------------------------
 
-UNICORN_DECODED = T.StructType([
-    T.StructField("name", T.StringType()),
-    T.StructField("age", T.IntegerType()),
-    T.StructField("fur_colour", T.StringType()),          # pb3 enum name
-    T.StructField("favourite_colours", T.ArrayType(T.StringType())),
-    T.StructField("favourite_numbers", T.ArrayType(T.IntegerType())),
-    T.StructField("is_pegasus", T.BooleanType()),
-    T.StructField("mother_name", T.StringType()),
-    T.StructField("mother_age", T.IntegerType()),
-    T.StructField("mother_fur", T.StringType()),
-    T.StructField("error", T.StringType()),
-])
-
-
-@F.pandas_udf(T.BinaryType())
-def _encode_unicorn_udf(name: pd.Series, age: pd.Series, fur: pd.Series,
-                        favc: pd.Series, favn: pd.Series, is_peg: pd.Series,
-                        m_name: pd.Series, m_age: pd.Series,
-                        m_fur: pd.Series) -> pd.Series:
-    """unicorn wire bytes with proto3 packed encoding for the repeated
-    numeric fields (the proto3 default a real encoder emits) and a nested
-    length-delimited mother message."""
-    from ..functions.wire import (
-        py_field_len, py_field_string, py_field_varint, py_varint,
-    )
-
-    out = []
-    for n, a, f, fc, fn, p, mn, ma, mf in zip(
-            name, age, fur, favc, favn, is_peg, m_name, m_age, m_fur):
-        buf = b""
-        if n:
-            buf += py_field_string(1, n)
-        if a:
-            buf += py_field_varint(2, int(a))
-        if f:
-            buf += py_field_varint(3, int(f))
-        if len(fc):
-            buf += py_field_len(4, b"".join(py_varint(int(c)) for c in fc))
-        if len(fn):
-            buf += py_field_len(5, b"".join(py_varint(int(v)) for v in fn))
-        if p:
-            buf += py_field_varint(6, 1)
-        mother = b""
-        if mn:
-            mother += py_field_string(1, mn)
-        if ma:
-            mother += py_field_varint(2, int(ma))
-        if mf:
-            mother += py_field_varint(3, int(mf))
-        buf += py_field_len(7, mother)  # mother always serialized (even empty)
-        out.append(buf)
-    return pd.Series(out)
-
-
-def _make_unicorn_decode_udf(registry: SchemaRegistry):
-    @F.pandas_udf(UNICORN_DECODED)
-    def _decode(payload: pd.Series) -> pd.DataFrame:
-        names = [f.name for f in UNICORN_DECODED]
-        cols: dict[str, list] = {n: [] for n in names}
-        for buf in payload:
-            try:
-                d = py_decode(bytes(buf), registry, "unicorn")
-                m = d["mother"] or {}
-                cols["name"].append(d["name"])
-                cols["age"].append(d["age"])
-                cols["fur_colour"].append(d["fur_colour"])
-                cols["favourite_colours"].append(d["favourite_colours"])
-                cols["favourite_numbers"].append(d["favourite_numbers"])
-                cols["is_pegasus"].append(d["is_pegasus"])
-                cols["mother_name"].append(m.get("name"))
-                cols["mother_age"].append(m.get("age"))
-                cols["mother_fur"].append(m.get("fur_colour"))
-                cols["error"].append(None)
-            except ValueError:
-                for n in names:
-                    cols[n].append(None if n != "error" else WIRE_ERROR)
-        out = pd.DataFrame(cols, columns=names)
-        for c in ("age", "mother_age"):
-            out[c] = out[c].astype("Int64")
-        return out
-
-    return _decode
-
-
-def unicorn_roundtrip(df: DataFrame, registry: SchemaRegistry | None = None
-                      ) -> DataFrame:
-    """Encode (name, age, fur, favc, favn, is_peg, m_*) columns as unicorn
-    wire bytes and decode back -> ``decoded`` struct. Exercises nested
-    messages and proto3 PACKED repeated enum/int fields end to end."""
+def wire_encode(df: DataFrame, msg_col: str | Column, message: str,
+                registry: SchemaRegistry | None = None,
+                proto_version: int = 3) -> DataFrame:
+    """Append BinaryType ``payload``: the struct column ``msg_col`` —
+    fields named like ``message``'s, nested messages as structs, repeated
+    fields as arrays, maps as maps; absent fields count as unset —
+    serialized per row by ``py_encode``. Enum fields take codes or names;
+    a ``struct`` (google.protobuf.Struct) field takes a struct whose fields
+    become its keys. One Arrow-batched Python exchange; a NULL struct
+    encodes to a NULL payload."""
     reg = registry if registry is not None else default_registry()
-    enc = df.withColumn(
-        "payload",
-        _encode_unicorn_udf(
-            F.col("u_name"), F.col("u_age"), F.col("u_fur"),
-            F.col("u_favc"), F.col("u_favn"), F.col("u_peg"),
-            F.col("m_name"), F.col("m_age"), F.col("m_fur"),
-        ),
-    )
-    return enc.withColumn("decoded",
-                          _make_unicorn_decode_udf(reg)(F.col("payload")))
+
+    @F.udf(T.BinaryType(), useArrow=True)
+    def _encode(row):
+        if row is None:
+            return None
+        return py_encode(row.asDict(recursive=True), reg, message,
+                         proto_version)
+
+    col = F.col(msg_col) if isinstance(msg_col, str) else msg_col
+    return df.withColumn("payload", _encode(col))
 
 
-# ---------------------------------------------------------------------------
-# contact: map<string,int32> entries on the wire
-# (spec/helpers/pb3/PhoneDirectory_pb.rb:7-28; map entry = message {1:k, 2:v})
-# ---------------------------------------------------------------------------
-
-CONTACT_DECODED = T.StructType([
-    T.StructField("name", T.StringType()),
-    T.StructField("phones", T.ArrayType(T.StructType([
-        T.StructField("label", T.StringType()),
-        T.StructField("number", T.IntegerType()),
-    ]))),  # map entries, sorted by label (maps hash-compare unreliably)
-    T.StructField("error", T.StringType()),
-])
+# decoded-integer column ranges: a varint that does not fit its
+# registry-typed column dead-letters instead of failing the Arrow batch
+_INT_RANGES = {
+    "int32": (-(1 << 31), 1 << 31), "sint32": (-(1 << 31), 1 << 31),
+    "int64": (-(1 << 63), 1 << 63), "sint64": (-(1 << 63), 1 << 63),
+    "uint32": (0, 1 << 32), "uint64": (0, 1 << 64),
+}
 
 
-@F.pandas_udf(T.BinaryType())
-def _encode_contact_udf(name: pd.Series, labels: pd.Series,
-                        numbers: pd.Series) -> pd.Series:
-    """contact wire bytes: each map entry is its own length-delimited
-    sub-message {field 1: key, field 2: value} — the proto3 map encoding."""
-    from ..functions.wire import py_field_len, py_field_string, py_field_varint
+def _scalar_conv(ftype: str):
+    """py_decode scalar -> its registry-typed column value."""
+    bounds = _INT_RANGES.get(ftype)
+    if bounds is None:
+        return lambda v: v
+    lo, hi = bounds
+    wrap = Decimal if ftype == "uint64" else int
 
-    out = []
-    for n, ls, ns in zip(name, labels, numbers):
-        buf = py_field_string(1, n) if n else b""
-        for lab, num in zip(ls, ns):
-            entry = py_field_string(1, lab) + (
-                py_field_varint(2, int(num)) if int(num) else b""
-            )
-            buf += py_field_len(2, entry)
-        out.append(buf)
-    return pd.Series(out)
+    def conv(v):
+        if v is None:
+            return None
+        if not lo <= v < hi:
+            raise ValueError(WIRE_ERROR)
+        return wrap(v)
 
-
-def _make_contact_decode_udf(registry: SchemaRegistry):
-    @F.pandas_udf(CONTACT_DECODED)
-    def _decode(payload: pd.Series) -> pd.DataFrame:
-        cols: dict[str, list] = {"name": [], "phones": [], "error": []}
-        for buf in payload:
-            try:
-                d = py_decode(bytes(buf), registry, "contact")
-                cols["name"].append(d["name"])
-                cols["phones"].append(
-                    [(k, v) for k, v in sorted(d["phone_numbers"].items())]
-                )
-                cols["error"].append(None)
-            except ValueError:
-                cols["name"].append(None)
-                cols["phones"].append(None)
-                cols["error"].append(WIRE_ERROR)
-        return pd.DataFrame(cols)
-
-    return _decode
+    return conv
 
 
-def contact_roundtrip(df: DataFrame, registry: SchemaRegistry | None = None,
-                      impl: str = "arrow") -> DataFrame:
-    """Encode (c_name, c_labels array<string>, c_numbers array<int>) as
-    contact wire bytes (proto3 map entries) and decode back.
+def _row_builder(reg: SchemaRegistry, message: str, depth: int):
+    """py_decode dict -> tuple in the ``_jvm_row_schema(..., depth=depth)``
+    layout: maps as (key, value) entry lists in first-seen order, uint64 as
+    Decimal, oneof groups as the chosen member's name."""
+    steps = []
+    groups: list[str] = []
+    for _num, f in reg.messages[message].wire_fields():
+        if f.type.startswith("message:"):
+            if depth <= 0:
+                continue
+            sub = _row_builder(reg, f.type[8:], depth - 1)
+            conv = lambda v, sub=sub: None if v is None else sub(v)  # noqa: E731
+        elif f.type.startswith("map<"):
+            kc, vc = (_scalar_conv(t.strip())
+                      for t in f.type[4:-1].split(",", 1))
+            conv = lambda m, kc=kc, vc=vc: [  # noqa: E731
+                (kc(k), vc(v)) for k, v in m.items()]
+        else:
+            conv = _scalar_conv(f.type)
+        if f.repeated and not f.type.startswith("map<"):
+            conv = lambda vs, c=conv: [c(v) for v in vs]  # noqa: E731
+        steps.append((f.name, conv))
+        if f.oneof and f.oneof not in groups:
+            groups.append(f.oneof)
 
-    ``impl='jvm_dynamic'`` decodes the SAME bytes through the vendored
-    ``WireDecodeRow`` harness (round-6 verdict item 3: maps past the flat
-    scope) and re-projects to the Arrow twin's ``CONTACT_DECODED`` shape
-    with pure Column ops — entries sorted by label via ``array_sort``,
-    matching the Python ``sorted(dict.items())``."""
+    def build(d: dict) -> tuple:
+        chosen = d["_pb_oneof"]
+        return (tuple(c(d[name]) for name, c in steps)
+                + tuple(chosen.get(g) for g in groups))
+
+    return build
+
+
+def decode_message_wire(df: DataFrame, message: str,
+                        payload_col: str = "payload",
+                        registry: SchemaRegistry | None = None,
+                        proto_version: int = 3, impl: str = "arrow",
+                        max_recursion_depth: int = 3) -> DataFrame:
+    """BinaryType payload -> ``decoded`` struct for ANY registered message:
+    its fields in descriptor order (``_jvm_row_schema``: nested messages as
+    structs, repeated fields as arrays, maps as ``array<struct<key,value>>``
+    in first-seen key order, uint64 as DECIMAL(20,0), pb2 enums as long),
+    one ``oneof_<group>`` slot per oneof, then ``error`` — NULL on success,
+    otherwise the dead-letter tag with every field NULL and the payload
+    column kept. The reference's recursive walk (protobuf.rb:287-336; DNS
+    repeated nested structs spec/codecs/pb3_decode_spec.rb:172-241).
+
+    ``impl``:
+
+    - 'arrow': ``py_decode`` per payload inside one Arrow-batched pandas
+      UDF. Recursive types (unicorn, human) unroll to
+      ``max_recursion_depth`` nested levels (config.max_recursion_depth);
+      deeper payloads dead-letter under DEPTH_ERROR, malformed ones under
+      WIRE_ERROR.
+    - 'jvm_dynamic': the vendored ``WireDecodeRow`` Java UDF parses the
+      bytes with protobuf-java's ``DynamicMessage`` against the descriptor
+      set the ``from_protobuf`` path uses (zero Python workers, no
+      spark-protobuf jar needed). Same struct, same values; refuses
+      recursive types and google.protobuf.Struct fields."""
+    if impl not in ("arrow", "jvm_dynamic"):
+        raise ValueError(f"unknown decode impl: {impl}")
     reg = registry if registry is not None else default_registry()
-    enc = df.withColumn(
-        "payload",
-        _encode_contact_udf(F.col("c_name"), F.col("c_labels"),
-                            F.col("c_numbers")),
-    )
+    row_schema = _jvm_row_schema(
+        reg.messages[message], proto_version, reg,
+        depth=None if impl == "jvm_dynamic" else max_recursion_depth)
+    schema = T.StructType(
+        list(row_schema.fields) + [T.StructField("error", T.StringType())])
+
     if impl == "jvm_dynamic":
-        dec = decode_message_wire_jvm_dynamic(enc, "contact", "payload",
-                                              reg)
-        d = F.col("_jvm_decoded")
-        return (
-            dec.withColumnRenamed("decoded", "_jvm_decoded")
-            .withColumn(
-                "decoded",
-                F.struct(
-                    d["name"].alias("name"),
-                    F.array_sort(F.transform(
-                        d["phone_numbers"],
-                        lambda e: F.struct(e["key"].alias("label"),
-                                           e["value"].alias("number")),
-                    )).alias("phones"),
-                    d["error"].alias("error"),
-                ).cast(CONTACT_DECODED),
-            )
-            .drop("_jvm_decoded")
-        )
-    return enc.withColumn("decoded",
-                          _make_contact_decode_udf(reg)(F.col("payload")))
+        name = _ensure_jvm_row_udf(df.sparkSession, message, proto_version,
+                                   row_schema)
+        cfg = _jvm_wire_cfg(reg, proto_version, message)
+        p = F.col("_pb")
+        decoded = F.when(p.isNull(), F.lit(None)).otherwise(F.struct(
+            *[p[f.name].alias(f.name) for f in row_schema.fields],
+            F.lit(None).cast("string").alias("error"),
+        ))
+        return (df.withColumn("_pb", F.call_udf(name, F.col(payload_col),
+                                                F.lit(cfg)))
+                .withColumn("decoded", _or_dead_letter(decoded, schema))
+                .drop("_pb"))
 
+    build = _row_builder(reg, message, max_recursion_depth)
+    names = schema.fieldNames()
+    dead = (None,) * len(row_schema.fields)
 
-# ---------------------------------------------------------------------------
-# dns_message: uint64 above int64 range + bytes columns on the wire
-# (spec/helpers/pb3/dnsmessage_pb.rb:8-18; spec/codecs/pb3_decode_spec.rb:172-241)
-# ---------------------------------------------------------------------------
-
-DNS_DECODED = T.StructType([
-    T.StructField("id", T.DecimalType(20, 0)),      # uint64: full 2^64 range
-    T.StructField("response_code", T.LongType()),   # uint32
-    T.StructField("payload", T.BinaryType()),       # bytes stay raw
-    T.StructField("error", T.StringType()),
-])
-
-
-@F.pandas_udf(T.BinaryType())
-def _encode_dns_udf(id_dec: pd.Series, response_code: pd.Series,
-                    payload: pd.Series) -> pd.Series:
-    """dns_message wire bytes. Python ints are unbounded, so uint64 varints
-    above 2^63 encode exactly (the SQL-expression encoder is int64-bound —
-    this is the documented seam where unsigned-64 leaves Column arithmetic)."""
-    from ..functions.wire import py_field_len, py_field_varint
-
-    out = []
-    for i, rc, p in zip(id_dec, response_code, payload):
-        buf = py_field_varint(1, int(i))
-        if int(rc):
-            buf += py_field_varint(2, int(rc))
-        if p is not None and len(p):
-            buf += py_field_len(5, bytes(p))
-        out.append(buf)
-    return pd.Series(out)
-
-
-def _make_dns_decode_udf(registry: SchemaRegistry):
-    @F.pandas_udf(DNS_DECODED)
+    @F.pandas_udf(schema)
     def _decode(payload: pd.Series) -> pd.DataFrame:
         rows = []
         for buf in payload:
             try:
-                d = py_decode(bytes(buf), registry, "dns_message")
-                rows.append({
-                    "id": Decimal(d["id"]),
-                    "response_code": d["response_code"],
-                    "payload": d["payload"],
-                    "error": None,
-                })
-            except (ValueError, TypeError):
-                rows.append({"error": WIRE_ERROR})
-        out = pd.DataFrame(rows, columns=[f.name for f in DNS_DECODED])
-        out["response_code"] = out["response_code"].astype("Int64")
-        return out
+                if buf is None:
+                    raise ValueError(WIRE_ERROR)
+                d = py_decode(bytes(buf), reg, message, proto_version,
+                              depth=max_recursion_depth + 1)
+                rows.append(build(d) + (None,))
+            except ValueError as e:
+                # the tag routes: DEPTH_ERROR apart from malformed bytes
+                tag = DEPTH_ERROR if str(e) == DEPTH_ERROR else WIRE_ERROR
+                rows.append(dead + (tag,))
+        cols = list(zip(*rows)) if rows else [()] * len(names)
+        return pd.DataFrame({n: pd.Series(c, dtype=object)
+                             for n, c in zip(names, cols)}, columns=names)
 
-    return _decode
-
-
-def dns_roundtrip(df: DataFrame, registry: SchemaRegistry | None = None
-                  ) -> DataFrame:
-    """Encode (id_dec, response_code, payload_bin) columns as dns_message wire
-    bytes and decode them back -> ``decoded`` struct. Exercises uint64 values
-    >= 2^63 (DECIMAL(20,0) end to end — LongType would corrupt them) and raw
-    BinaryType round-tripping."""
-    reg = registry if registry is not None else default_registry()
-    enc = df.withColumn(
-        "payload",
-        _encode_dns_udf(F.col("id_dec"), F.col("response_code"),
-                        F.col("payload_bin")),
-    )
-    return enc.withColumn("decoded", _make_dns_decode_udf(reg)(F.col("payload")))
+    return df.withColumn("decoded", _decode(F.col(payload_col)))
 
 
 # ---------------------------------------------------------------------------
-# directory: REPEATED messages that each carry a map — the repeated-top-level
-# pattern (spec/helpers/pb3/events_pb.rb:7-16) at full nesting depth
-# ---------------------------------------------------------------------------
-
-DIRECTORY_DECODED = T.StructType([
-    T.StructField("scope", T.StringType()),
-    T.StructField("contacts", T.ArrayType(T.StructType([
-        T.StructField("name", T.StringType()),
-        T.StructField("phones", T.ArrayType(T.StructType([
-            T.StructField("label", T.StringType()),
-            T.StructField("number", T.IntegerType()),
-        ]))),
-    ]))),
-    T.StructField("error", T.StringType()),
-])
-
-
-@F.pandas_udf(T.BinaryType())
-def _encode_directory_udf(scope: pd.Series, c_names: pd.Series,
-                          c_labels: pd.Series, c_numbers: pd.Series
-                          ) -> pd.Series:
-    """directory wire bytes: field 2 repeated contact, each contact a
-    length-delimited sub-message whose own field 2 is the repeated map-entry
-    encoding — two levels of length-delimited nesting per phone number."""
-    from ..functions.wire import py_field_len, py_field_string, py_field_varint
-
-    out = []
-    for sc, names, labels, numbers in zip(scope, c_names, c_labels, c_numbers):
-        buf = py_field_string(1, sc) if sc else b""
-        for j, nm in enumerate(names):
-            contact = py_field_string(1, nm) if nm else b""
-            for lab, num in zip(labels[j], numbers[j]):
-                entry = py_field_string(1, lab) + (
-                    py_field_varint(2, int(num)) if int(num) else b""
-                )
-                contact += py_field_len(2, entry)
-            buf += py_field_len(2, contact)
-        out.append(buf)
-    return pd.Series(out)
-
-
-def _make_directory_decode_udf(registry: SchemaRegistry):
-    @F.pandas_udf(DIRECTORY_DECODED)
-    def _decode(payload: pd.Series) -> pd.DataFrame:
-        cols: dict[str, list] = {"scope": [], "contacts": [], "error": []}
-        for buf in payload:
-            try:
-                d = py_decode(bytes(buf), registry, "directory")
-                cols["scope"].append(d["scope"])
-                cols["contacts"].append([
-                    (c["name"],
-                     [(k, v) for k, v in sorted(c["phone_numbers"].items())])
-                    for c in d["contacts"]
-                ])
-                cols["error"].append(None)
-            except ValueError:
-                cols["scope"].append(None)
-                cols["contacts"].append(None)
-                cols["error"].append(WIRE_ERROR)
-        return pd.DataFrame(cols)
-
-    return _decode
-
-
-def directory_roundtrip(df: DataFrame, registry: SchemaRegistry | None = None
-                        ) -> DataFrame:
-    """Encode (scope, c_names array<string>, c_labels array<array<string>>,
-    c_numbers array<array<int>>) as a directory message — repeated contact
-    sub-messages each holding a proto3 map — and decode back."""
-    reg = registry if registry is not None else default_registry()
-    enc = df.withColumn(
-        "payload",
-        _encode_directory_udf(F.col("scope"), F.col("c_names"),
-                              F.col("c_labels"), F.col("c_numbers")),
-    )
-    return enc.withColumn(
-        "decoded", _make_directory_decode_udf(reg)(F.col("payload"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# float (fixed32) + double (fixed64) on the wire
-# (ProbeResult latency double: spec/helpers/pb3/ProbeResult_pb.rb:13;
-#  RUM user-agent major/minor float: spec/helpers/pb3/rum_pb.rb:41-44)
+# probe_result + user_agent through the numpy record-transposed walker: the
+# query-level evidence (pb_wire_float_double_vec) for its one nesting level
+# and fixed32/fixed64 gathers (ProbeResult_pb.rb:13 double; rum_pb.rb:41-44)
 # ---------------------------------------------------------------------------
 
 PROBE_UA_DECODED = T.StructType([
@@ -1682,604 +1326,46 @@ PROBE_UA_DECODED = T.StructType([
 ])
 
 
-@F.pandas_udf(T.BinaryType())
-def _encode_probe_udf(uuid: pd.Series, status: pd.Series, latency: pd.Series,
-                      ip: pd.Series) -> pd.Series:
-    """probe_result wire bytes: nested PingIPv4Result with a fixed64 IEEE
-    double. proto3 implicit presence: 0.0 doubles are omitted (and re-emerge
-    as the decoded default), the nested message is serialized whenever the
-    task was set — mirroring how the reference's probe fixture always carries
-    TaskPingIPv4Result (ProbeResult_pb.rb:9)."""
-    from ..functions.wire import (
-        py_field_double, py_field_len, py_field_string, py_field_varint,
-    )
+def _make_probe_ua_decode_udf(registry: SchemaRegistry):
+    """(probe_result payload, user_agent payload) -> PROBE_UA_DECODED via
+    ``pb_wire_vec``: probe_result.task (singular nested message) decodes in
+    a recursive vector pass over sub-slices of the same batch buffer, and
+    user_agent's fixed32 floats decode via byte gathers. Parity with
+    py_decode is fuzz-pinned (tests/test_wire_property.py)."""
+    import numpy as np
 
-    out = []
-    for u, st, lat, i in zip(uuid, status, latency, ip):
-        task = b""
-        if int(st):
-            task += py_field_varint(2, int(st))
-        if float(lat) != 0.0:
-            task += py_field_double(3, float(lat))
-        if i:
-            task += py_field_string(4, i)
-        buf = b""
-        if u:
-            buf += py_field_string(1, u)
-        buf += py_field_len(2, task)
-        out.append(buf)
-    return pd.Series(out)
+    from .pb_wire_vec import build_flat_plan, flat_decode_frame
 
-
-@F.pandas_udf(T.BinaryType())
-def _encode_ua_udf(family: pd.Series, major: pd.Series, minor: pd.Series,
-                   os: pd.Series) -> pd.Series:
-    """user_agent wire bytes: fixed32 IEEE floats at non-contiguous field
-    numbers 2 and 4 (rum_pb.rb:41-44)."""
-    from ..functions.wire import py_field_float, py_field_string
-
-    out = []
-    for fam, ma, mi, o in zip(family, major, minor, os):
-        buf = b""
-        if fam:
-            buf += py_field_string(1, fam)
-        if float(ma) != 0.0:
-            buf += py_field_float(2, float(ma))
-        if float(mi) != 0.0:
-            buf += py_field_float(4, float(mi))
-        if o:
-            buf += py_field_string(7, o)
-        out.append(buf)
-    return pd.Series(out)
-
-
-def _make_probe_ua_decode_udf(registry: SchemaRegistry,
-                              impl: str = "scalar"):
-    if impl == "vector":
-        # round-7 (round-6 verdict item 6): ONE NESTING LEVEL in the numpy
-        # record-transposed walker — probe_result.task (singular nested
-        # message, rum_pb.rb ProbeResult/PingIPv4Result) decodes in a
-        # recursive vector pass over sub-slices of the same batch buffer,
-        # and user_agent's fixed32 floats decode via byte gathers. Parity
-        # with py_decode is fuzz-pinned (tests/test_wire_property.py).
-        from .pb_wire_vec import build_flat_plan, flat_decode_frame
-
-        pplan = build_flat_plan(registry, "probe_result", 3)
-        uplan = build_flat_plan(registry, "user_agent", 3)
-        if pplan is None or uplan is None:  # pragma: no cover - registry
-            raise ValueError("probe_result/user_agent not flat-plannable")
-
-        @F.pandas_udf(PROBE_UA_DECODED)
-        def _decode_vec(probe_payload: pd.Series,
-                        ua_payload: pd.Series) -> pd.DataFrame:
-            import numpy as np
-
-            p = flat_decode_frame(probe_payload, pplan)
-            u = flat_decode_frame(ua_payload, uplan)
-            bad = (pd.Series(p["error"]).notna().to_numpy()
-                   | pd.Series(u["error"]).notna().to_numpy())
-            out = pd.DataFrame({
-                "uuid": pd.Series(p["uuid"]),
-                "status": pd.Series(p["task.status"]),
-                "latency": pd.Series(p["task.latency"]),
-                "ip": pd.Series(p["task.ip"]),
-                "family": pd.Series(u["family"]),
-                "major": pd.Series(u["major"]),
-                "minor": pd.Series(u["minor"]),
-                "os": pd.Series(u["os"]),
-            })
-            if bad.any():
-                keep = ~bad
-                for c in out.columns:
-                    out[c] = out[c].where(keep)
-            err = np.empty(len(out), object)
-            err[:] = None
-            err[bad] = WIRE_ERROR
-            out["error"] = err
-            return out
-
-        return _decode_vec
+    pplan = build_flat_plan(registry, "probe_result", 3)
+    uplan = build_flat_plan(registry, "user_agent", 3)
+    if pplan is None or uplan is None:  # pragma: no cover - registry
+        raise ValueError("probe_result/user_agent not flat-plannable")
 
     @F.pandas_udf(PROBE_UA_DECODED)
-    def _decode(probe_payload: pd.Series, ua_payload: pd.Series) -> pd.DataFrame:
-        names = [f.name for f in PROBE_UA_DECODED]
-        cols: dict[str, list] = {n: [] for n in names}
-        for pb, ub in zip(probe_payload, ua_payload):
-            try:
-                p = py_decode(bytes(pb), registry, "probe_result")
-                ua = py_decode(bytes(ub), registry, "user_agent")
-                task = p["task"] or {}
-                cols["uuid"].append(p["uuid"])
-                cols["status"].append(task.get("status"))
-                cols["latency"].append(task.get("latency"))
-                cols["ip"].append(task.get("ip"))
-                cols["family"].append(ua["family"])
-                cols["major"].append(ua["major"])
-                cols["minor"].append(ua["minor"])
-                cols["os"].append(ua["os"])
-                cols["error"].append(None)
-            except ValueError:
-                for n in names:
-                    cols[n].append(None if n != "error" else WIRE_ERROR)
-        return pd.DataFrame(cols, columns=names)
-
-    return _decode
-
-
-def probe_ua_roundtrip(df: DataFrame, registry: SchemaRegistry | None = None,
-                       impl: str = "scalar") -> DataFrame:
-    """Encode (uuid, status, latency, ip) as probe_result and (ua_family,
-    ua_major, ua_minor, ua_os) as user_agent wire bytes, decode both back ->
-    ``decoded`` struct. Exercises wire types 1 (fixed64 double) and 5
-    (fixed32 float) end to end, bit-exact IEEE round trips.
-
-    ``impl='vector'`` decodes through the numpy record-transposed walker —
-    probe_result.task is its one-nesting-level showcase (recursive vector
-    pass over sub-slices; round-6 verdict item 6)."""
-    reg = registry if registry is not None else default_registry()
-    enc = df.withColumn(
-        "probe_payload",
-        _encode_probe_udf(F.col("uuid"), F.col("status"), F.col("latency"),
-                          F.col("ip")),
-    ).withColumn(
-        "ua_payload",
-        _encode_ua_udf(F.col("ua_family"), F.col("ua_major"),
-                       F.col("ua_minor"), F.col("ua_os")),
-    )
-    return enc.withColumn(
-        "decoded",
-        _make_probe_ua_decode_udf(reg, impl=impl)(F.col("probe_payload"),
-                                                  F.col("ua_payload")),
-    )
-
-
-# ---------------------------------------------------------------------------
-# repeated nested messages on the wire: dns_message.question
-# (spec/helpers/pb3/events_pb.rb:11-12 pattern, exercised
-#  spec/codecs/pb3_decode_spec.rb:311-335; dnsmessage_pb.rb:8-13)
-# ---------------------------------------------------------------------------
-
-DNS_Q_DECODED = T.StructType([
-    T.StructField("id", T.DecimalType(20, 0)),
-    T.StructField("questions", T.ArrayType(T.StructType([
-        T.StructField("name", T.StringType()),   # bytes, generator emits ASCII
-        T.StructField("qtype", T.LongType()),
-        T.StructField("qclass", T.LongType()),
-    ]))),
-    T.StructField("error", T.StringType()),
-])
-
-
-@F.pandas_udf(T.BinaryType())
-def _encode_dns_questions_udf(id_dec: pd.Series, q_names: pd.Series,
-                              q_types: pd.Series, q_classes: pd.Series
-                              ) -> pd.Series:
-    """dns_message wire bytes with REPEATED message field 4: each question is
-    its own length-delimited sub-message, repeated by emitting the tag once
-    per element (the unpacked encoding messages always use)."""
-    from ..functions.wire import py_field_len, py_field_varint
-
-    out = []
-    for i, ns, ts, cs in zip(id_dec, q_names, q_types, q_classes):
-        buf = py_field_varint(1, int(i))
-        for n, t, c in zip(ns, ts, cs):
-            q = py_field_len(1, n.encode("utf-8"))
-            if int(t):
-                q += py_field_varint(2, int(t))
-            if int(c):
-                q += py_field_varint(3, int(c))
-            buf += py_field_len(4, q)
-        out.append(buf)
-    return pd.Series(out)
-
-
-def _make_dns_questions_decode_udf(registry: SchemaRegistry):
-    @F.pandas_udf(DNS_Q_DECODED)
-    def _decode(payload: pd.Series) -> pd.DataFrame:
-        cols: dict[str, list] = {"id": [], "questions": [], "error": []}
-        for buf in payload:
-            try:
-                d = py_decode(bytes(buf), registry, "dns_message")
-                cols["id"].append(Decimal(d["id"]))
-                cols["questions"].append([
-                    (q["name"].decode("utf-8"), q["qtype"], q["qclass"])
-                    for q in d["question"]
-                ])
-                cols["error"].append(None)
-            except (ValueError, UnicodeDecodeError):
-                cols["id"].append(None)
-                cols["questions"].append(None)
-                cols["error"].append(WIRE_ERROR)
-        return pd.DataFrame(cols)
-
-    return _decode
-
-
-def dns_questions_roundtrip(df: DataFrame,
-                            registry: SchemaRegistry | None = None,
-                            impl: str = "arrow") -> DataFrame:
-    """Encode (id_dec, q_names, q_types, q_classes) as a dns_message with a
-    populated REPEATED nested-message field and decode back. Each element
-    carries its own proto3 defaults (qtype/qclass omitted at 0).
-
-    ``impl='jvm_dynamic'`` decodes the SAME bytes via ``WireDecodeRow``
-    (round-6 verdict item 3) and re-projects to the Arrow twin's
-    ``DNS_Q_DECODED`` shape with pure Column ops — the reference's exact
-    repeated-nested-struct scenario (spec/codecs/pb3_decode_spec.rb:172-241).
-    One documented seam: the JVM path decodes question names with a
-    binary->string cast (replacement chars on invalid UTF-8) where the
-    Arrow twin dead-letters — identical on any valid-UTF-8 corpus."""
-    reg = registry if registry is not None else default_registry()
-    enc = df.withColumn(
-        "payload",
-        _encode_dns_questions_udf(F.col("id_dec"), F.col("q_names"),
-                                  F.col("q_types"), F.col("q_classes")),
-    )
-    if impl == "jvm_dynamic":
-        dec = decode_message_wire_jvm_dynamic(enc, "dns_message", "payload",
-                                              reg)
-        d = F.col("_jvm_decoded")
-        return (
-            dec.withColumnRenamed("decoded", "_jvm_decoded")
-            .withColumn(
-                "decoded",
-                F.struct(
-                    d["id"].alias("id"),
-                    F.transform(
-                        d["question"],
-                        lambda q: F.struct(
-                            q["name"].cast("string").alias("name"),
-                            q["qtype"].alias("qtype"),
-                            q["qclass"].alias("qclass"),
-                        ),
-                    ).alias("questions"),
-                    d["error"].alias("error"),
-                ).cast(DNS_Q_DECODED),
-            )
-            .drop("_jvm_decoded")
-        )
-    return enc.withColumn(
-        "decoded", _make_dns_questions_decode_udf(reg)(F.col("payload"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# depth-3 recursion on the wire: human mother/father lineage, pb2 dialect
-# (spec/helpers/pb2/human.pb.rb:16-17; walked 3 generations deep in
-#  spec/codecs/pb2_spec.rb:43-77 — grandma = mother.mother.first_name)
-# ---------------------------------------------------------------------------
-
-LINEAGE_DECODED = T.StructType([
-    T.StructField("first_name", T.StringType()),
-    T.StructField("last_name", T.StringType()),
-    T.StructField("age", T.IntegerType()),
-    T.StructField("mother_first", T.StringType()),
-    T.StructField("mother_age", T.IntegerType()),
-    T.StructField("grandma_first", T.StringType()),
-    T.StructField("grandma_age", T.IntegerType()),
-    T.StructField("father_first", T.StringType()),
-    T.StructField("father_age", T.IntegerType()),
-    T.StructField("error", T.StringType()),
-])
-
-
-@F.pandas_udf(T.BinaryType())
-def _encode_human_udf(first: pd.Series, last: pd.Series, age: pd.Series,
-                      m_first: pd.Series, m_age: pd.Series,
-                      gm_first: pd.Series, gm_age: pd.Series,
-                      f_first: pd.Series, f_age: pd.Series) -> pd.Series:
-    """human wire bytes, three generations on the mother line (self ->
-    mother -> mother.mother) plus a father — pb2 dialect (explicit presence:
-    only set fields are serialized)."""
-    from ..functions.wire import py_field_len, py_field_string, py_field_varint
-
-    def person(fn, a, mother: bytes | None = None) -> bytes:
-        buf = py_field_string(1, fn)
-        if mother is not None:
-            buf += py_field_len(4, mother)
-        buf += py_field_varint(6, int(a))
-        return buf
-
-    out = []
-    for fi, la, a, mf, ma, gf, ga, ff, fa in zip(
-            first, last, age, m_first, m_age, gm_first, gm_age,
-            f_first, f_age):
-        grandma = person(gf, ga)
-        mother = person(mf, ma, mother=grandma)
-        father = person(ff, fa)
-        buf = py_field_string(1, fi) + py_field_string(3, la)
-        buf += py_field_len(4, mother) + py_field_len(5, father)
-        buf += py_field_varint(6, int(a))
-        out.append(buf)
-    return pd.Series(out)
-
-
-def _make_human_decode_udf(registry: SchemaRegistry,
-                           max_recursion_depth: int = 3):
-    """human (pb2, SELF-REFERENCING via ``mother``) decode. Payloads nested
-    deeper than ``max_recursion_depth`` dead-letter with the DISTINCT
-    ``DEPTH_ERROR`` tag (loud bound enforcement — the output schema only
-    carries 3 generations, so a deeper message must never pass silently)."""
-    @F.pandas_udf(LINEAGE_DECODED)
-    def _decode(payload: pd.Series) -> pd.DataFrame:
-        names = [f.name for f in LINEAGE_DECODED]
-        cols: dict[str, list] = {n: [] for n in names}
-        for buf in payload:
-            try:
-                d = py_decode(bytes(buf), registry, "human", proto_version=2,
-                              depth=max_recursion_depth + 1)
-                m = d["mother"] or {}
-                gm = m.get("mother") or {}
-                f = d["father"] or {}
-                cols["first_name"].append(d["first_name"])
-                cols["last_name"].append(d["last_name"])
-                cols["age"].append(d["age"])
-                cols["mother_first"].append(m.get("first_name"))
-                cols["mother_age"].append(m.get("age"))
-                cols["grandma_first"].append(gm.get("first_name"))
-                cols["grandma_age"].append(gm.get("age"))
-                cols["father_first"].append(f.get("first_name"))
-                cols["father_age"].append(f.get("age"))
-                cols["error"].append(None)
-            except ValueError as e:
-                # preserve the tag: DEPTH_ERROR routes separately from
-                # malformed-bytes WIRE_ERROR in the dead-letter split
-                for n in names:
-                    cols[n].append(None if n != "error" else str(e))
-        out = pd.DataFrame(cols, columns=names)
-        for c in ("age", "mother_age", "grandma_age", "father_age"):
-            out[c] = out[c].astype("Int64")
+    def _decode_vec(probe_payload: pd.Series,
+                    ua_payload: pd.Series) -> pd.DataFrame:
+        p = flat_decode_frame(probe_payload, pplan)
+        u = flat_decode_frame(ua_payload, uplan)
+        bad = (pd.Series(p["error"]).notna().to_numpy()
+               | pd.Series(u["error"]).notna().to_numpy())
+        out = pd.DataFrame({
+            "uuid": pd.Series(p["uuid"]),
+            "status": pd.Series(p["task.status"]),
+            "latency": pd.Series(p["task.latency"]),
+            "ip": pd.Series(p["task.ip"]),
+            "family": pd.Series(u["family"]),
+            "major": pd.Series(u["major"]),
+            "minor": pd.Series(u["minor"]),
+            "os": pd.Series(u["os"]),
+        })
+        if bad.any():
+            keep = ~bad
+            for c in out.columns:
+                out[c] = out[c].where(keep)
+        err = np.empty(len(out), object)
+        err[:] = None
+        err[bad] = WIRE_ERROR
+        out["error"] = err
         return out
 
-    return _decode
-
-
-def human_lineage_roundtrip(df: DataFrame,
-                            registry: SchemaRegistry | None = None,
-                            max_recursion_depth: int = 3) -> DataFrame:
-    """Encode (h_first, h_last, h_age, m_first, m_age, gm_first, gm_age,
-    f_first, f_age) as a 3-generation human message and decode back —
-    the pb2_spec.rb:43-77 walk (``mother.mother.first_name``) over real
-    wire bytes. ``max_recursion_depth`` (config.max_recursion_depth) bounds
-    the decode: deeper lineages dead-letter with DEPTH_ERROR."""
-    reg = registry if registry is not None else default_registry()
-    enc = df.withColumn(
-        "payload",
-        _encode_human_udf(
-            F.col("h_first"), F.col("h_last"), F.col("h_age"),
-            F.col("m_first"), F.col("m_age"),
-            F.col("gm_first"), F.col("gm_age"),
-            F.col("f_first"), F.col("f_age"),
-        ),
-    )
-    return enc.withColumn(
-        "decoded",
-        _make_human_decode_udf(reg, max_recursion_depth)(F.col("payload")))
-
-
-# ---------------------------------------------------------------------------
-# ColourProtoTest: pb2 repeated-enum / repeated-bool dialect
-# (spec/helpers/pb2/ColourTestcase.pb.rb; spec/codecs/pb2_spec.rb:82-104)
-# ---------------------------------------------------------------------------
-
-COLOUR_DECODED = T.StructType([
-    T.StructField("event_id", T.LongType()),
-    T.StructField("n_bytes", T.IntegerType()),
-    # arrays rendered as CSV strings: the driver canonicalizer can't sort
-    # list-typed cells, and the CSV pins element ORDER too
-    T.StructField("colours_csv", T.StringType()),
-    T.StructField("bools_csv", T.StringType()),
-    T.StructField("least_liked", T.LongType()),
-    T.StructField("version", T.StringType()),
-    T.StructField("error", T.StringType()),
-])
-
-
-def colour_roundtrip(df: DataFrame, registry: SchemaRegistry | None = None
-                     ) -> DataFrame:
-    """Encode (c1, c2, b1, b2, b3, least_liked, version) as a ColourProtoTest
-    message under the pb2 dialect (UNPACKED repeated varints — proto2's
-    default packing) and decode the real wire bytes back with
-    ``proto_version=2``: enum codes must stay ints INSIDE the arrays, never
-    symbolized (spec/codecs/pb2_spec.rb:96-99), and repeated bools round-trip
-    zeros (false) without proto3's default-dropping."""
-    reg = registry if registry is not None else default_registry()
-
-    def _roundtrip(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                value = {
-                    "favourite_colours": [int(r.c1), int(r.c2)],
-                    "booleantest": [bool(r.b1), bool(r.b2), bool(r.b3)],
-                    "least_liked": int(r.least_liked),
-                    "version": r.version,
-                }
-                buf = py_encode(value, reg, "colour_testcase",
-                                proto_version=2)
-                try:
-                    d = py_decode(buf, reg, "colour_testcase",
-                                  proto_version=2)
-                    rows.append((
-                        int(r.event_id), len(buf),
-                        ",".join(str(int(c)) for c in d["favourite_colours"]),
-                        ",".join("1" if b else "0" for b in d["booleantest"]),
-                        int(d["least_liked"]), d["version"], None,
-                    ))
-                except ValueError:
-                    rows.append((int(r.event_id), len(buf),
-                                 None, None, None, None, WIRE_ERROR))
-            out = pd.DataFrame(rows,
-                               columns=[f.name for f in COLOUR_DECODED])
-            out["n_bytes"] = out["n_bytes"].astype("Int32")
-            yield out
-
-    return df.mapInPandas(_roundtrip, COLOUR_DECODED)
-
-
-# ---------------------------------------------------------------------------
-# akamai_rum: the reference's widest real-world fixture on the wire
-# (spec/helpers/pb3/rum_pb.rb:7-77): 15-field envelope, four nested
-# messages, floats at depth 2, bool, repeated string
-# ---------------------------------------------------------------------------
-
-RUM_DECODED = T.StructType([
-    T.StructField("event_id", T.LongType()),
-    T.StructField("n_bytes", T.LongType()),
-    T.StructField("hdr_ts", T.LongType()),
-    T.StructField("sender", T.StringType()),
-    T.StructField("version", T.StringType()),
-    T.StructField("url", T.StringType()),
-    T.StructField("session_id", T.StringType()),
-    T.StructField("locale", T.StringType()),
-    T.StructField("ua_family", T.StringType()),
-    T.StructField("ua_major", T.DoubleType()),
-    T.StructField("geo_cc", T.StringType()),
-    T.StructField("geo_lat", T.DoubleType()),
-    T.StructField("geo_ovr", T.BooleanType()),
-    T.StructField("fcp", T.IntegerType()),
-    T.StructField("tti", T.IntegerType()),
-    T.StructField("longtasks", T.DoubleType()),
-    T.StructField("ctests", T.StringType()),
-    T.StructField("dom_script", T.IntegerType()),
-    T.StructField("domain", T.StringType()),
-    T.StructField("error", T.StringType()),
-])
-
-
-def akamai_rum_roundtrip(df: DataFrame,
-                         registry: SchemaRegistry | None = None) -> DataFrame:
-    """Encode each row as a full akamai_rum message via the generic
-    registry-driven encoder (py_encode), decode the REAL wire bytes back
-    (py_decode), and emit the flattened projection — one mapInPandas Arrow
-    stage for the whole width (a 20-series pandas_udf signature would add
-    nothing but plumbing). ``n_bytes`` carries the wire size as evidence the
-    bytes exist."""
-    reg = registry if registry is not None else default_registry()
-
-    def _roundtrip(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                value = {
-                    "header": {"unix_timestamp": int(r.hdr_ts),
-                               "sender_id": r.sender},
-                    "version": r.version, "url": r.url,
-                    "session_id": r.session_id, "locale": r.locale,
-                    "user_agent": {"family": r.ua_family,
-                                   "major": float(r.ua_major),
-                                   "minor": float(r.ua_minor),
-                                   "os": r.ua_os},
-                    "geo": {"cc": r.geo_cc, "city": r.geo_city,
-                            "lat": float(r.geo_lat), "lon": float(r.geo_lon),
-                            "ovr": bool(r.geo_ovr)},
-                    "timers": {"t_resp": int(r.t_resp), "fid": int(r.fid),
-                               "fcp": int(r.fcp), "tti": int(r.tti),
-                               "ttvr": int(r.ttvr),
-                               "longtasks": float(r.longtasks)},
-                    "page_group": r.page_group,
-                    "active_ctests": [r.ctest1, r.ctest2],
-                    "dom": {"script": int(r.dom_script),
-                            "ext": int(r.dom_ext), "ln": int(r.dom_ln)},
-                    "domain": r.domain, "timestamp": r.ts_str,
-                }
-                buf = py_encode(value, reg, "akamai_rum")
-                try:
-                    d = py_decode(buf, reg, "akamai_rum")
-                    h, ua = d["header"] or {}, d["user_agent"] or {}
-                    geo, tm = d["geo"] or {}, d["timers"] or {}
-                    dom = d["dom"] or {}
-                    rows.append((
-                        int(r.event_id), len(buf),
-                        h.get("unix_timestamp"), h.get("sender_id"),
-                        d["version"], d["url"], d["session_id"], d["locale"],
-                        ua.get("family"), ua.get("major"),
-                        geo.get("cc"), geo.get("lat"), geo.get("ovr"),
-                        tm.get("fcp"), tm.get("tti"), tm.get("longtasks"),
-                        ",".join(d["active_ctests"]), dom.get("script"),
-                        d["domain"], None,
-                    ))
-                except ValueError:
-                    rows.append((int(r.event_id), len(buf))
-                                + (None,) * 17 + (WIRE_ERROR,))
-            out = pd.DataFrame(rows, columns=[f.name for f in RUM_DECODED])
-            for c in ("fcp", "tti", "dom_script"):
-                out[c] = out[c].astype("Int32")
-            yield out
-
-    return df.mapInPandas(_roundtrip, RUM_DECODED)
-
-
-# ---------------------------------------------------------------------------
-# google.protobuf.Struct on the wire (protobuf.rb:290-294;
-#  spec/helpers/pb3/struct_test_pb.rb:8-14)
-# ---------------------------------------------------------------------------
-
-STRUCT_DECODED = T.StructType([
-    T.StructField("user_id", T.StringType()),
-    T.StructField("details_json", T.StringType()),  # canonical sorted-key JSON
-    T.StructField("error", T.StringType()),
-])
-
-
-@F.pandas_udf(T.BinaryType())
-def _encode_struct_req_udf(user_id: pd.Series, vendor: pd.Series,
-                           count: pd.Series, active: pd.Series,
-                           tag1: pd.Series, tag2: pd.Series,
-                           lat: pd.Series, city: pd.Series) -> pd.Series:
-    """send_json_request wire bytes: UserID + a Details Struct holding every
-    Value kind — string, number (double), bool, null, a nested struct, and a
-    list — in the well-known map<string,Value> encoding."""
-    from ..functions.wire import py_field_len, py_field_string, py_struct
-
-    out = []
-    for u, v, c, a, t1, t2, la, ci in zip(user_id, vendor, count, active,
-                                          tag1, tag2, lat, city):
-        details = {
-            "vendor": v,
-            "count": float(c),
-            "active": bool(a),
-            "note": None,
-            "tags": [t1, t2],
-            "geo": {"lat": float(la), "city": ci},
-        }
-        buf = py_field_string(1, u) + py_field_len(2, py_struct(details))
-        out.append(buf)
-    return pd.Series(out)
-
-
-def _make_struct_req_decode_udf(registry: SchemaRegistry):
-    @F.pandas_udf(STRUCT_DECODED)
-    def _decode(payload: pd.Series) -> pd.DataFrame:
-        cols: dict[str, list] = {"user_id": [], "details_json": [], "error": []}
-        for buf in payload:
-            try:
-                d = py_decode(bytes(buf), registry, "send_json_request")
-                cols["user_id"].append(d["user_id"])
-                cols["details_json"].append(d["details"])
-                cols["error"].append(None)
-            except ValueError:
-                cols["user_id"].append(None)
-                cols["details_json"].append(None)
-                cols["error"].append(WIRE_ERROR)
-        return pd.DataFrame(cols)
-
-    return _decode
-
-
-def struct_roundtrip(df: DataFrame, registry: SchemaRegistry | None = None
-                     ) -> DataFrame:
-    """Encode (user_id, s_vendor, s_count, s_active, s_tag1, s_tag2, s_lat,
-    s_city) as send_json_request wire bytes (Details = google.protobuf.Struct)
-    and decode back -> ``decoded`` struct with the Struct as canonical JSON."""
-    reg = registry if registry is not None else default_registry()
-    enc = df.withColumn(
-        "payload",
-        _encode_struct_req_udf(
-            F.col("user_id"), F.col("s_vendor"), F.col("s_count"),
-            F.col("s_active"), F.col("s_tag1"), F.col("s_tag2"),
-            F.col("s_lat"), F.col("s_city"),
-        ),
-    )
-    return enc.withColumn("decoded",
-                          _make_struct_req_decode_udf(reg)(F.col("payload")))
+    return _decode_vec

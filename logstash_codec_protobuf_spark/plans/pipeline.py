@@ -75,7 +75,9 @@ def _combos_per_partition(sf_dir: str, transcripts_path: str | None) -> int:
     the density — same pattern as the workload-size io codec choice
     (bench.py). Threshold: staged 20M-turn input is ~3 GB, the headline
     derivation input is ~2 MB; 64 MB splits them with orders of magnitude
-    of margin. SPARK_GRAFT_COMBOS_PER_PARTITION overrides for deployments."""
+    of margin. SPARK_GRAFT_COMBOS_PER_PARTITION overrides for deployments.
+    The input directory is walked recursively, so Hive-partitioned layouts
+    (``dt=.../part-*.parquet``) count their full size."""
     import os
 
     env = os.environ.get("SPARK_GRAFT_COMBOS_PER_PARTITION")
@@ -84,8 +86,9 @@ def _combos_per_partition(sf_dir: str, transcripts_path: str | None) -> int:
     try:
         if transcripts_path is not None:
             size = sum(
-                os.path.getsize(os.path.join(transcripts_path, f))
-                for f in os.listdir(transcripts_path)
+                os.path.getsize(os.path.join(root, f))
+                for root, _dirs, files in os.walk(transcripts_path)
+                for f in files
                 if f.endswith(".parquet")
             )
         else:

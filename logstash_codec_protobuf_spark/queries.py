@@ -761,15 +761,14 @@ def pb_wire_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("pb_wire_decode_jvmdyn", _oracle(_WIRE_DECODE_ORACLE))
 def pb_wire_decode_jvmdyn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME wire decode as ``pb_wire_decode``, forced through the
-    vendored JVM ``DynamicMessage`` harness (round-5 verdict item 1: the
-    spark-protobuf jar is unobtainable in-sandbox, but the Spark Connect jar
-    shades a complete protobuf-java runtime, so
-    ``operators/pb_wire.decode_turn_wire_jvm_dynamic`` decodes the wire
-    bytes JVM-side with ZERO Python workers — descriptor set compiled by
+    vendored JVM ``DynamicMessage`` harness (round-5 verdict item 1: without
+    the spark-protobuf jar, the Spark Connect jar still shades a complete
+    protobuf-java runtime, so ``operators/pb_wire.decode_message_wire``'s
+    ``jvm_dynamic`` impl decodes the wire bytes JVM-side with ZERO Python
+    workers — descriptor set compiled by
     ``descriptors.descriptor_set_bytes``, ``WireDecodeRow`` materializing
-    the ``DynamicMessage`` directly as a Catalyst Row; no JSON detour —
-    that is the separate ``jvm_json`` foil). Shares ``pb_wire_decode``'s
-    oracle verbatim:
+    the ``DynamicMessage`` directly as a Catalyst Row, no JSON detour).
+    Shares ``pb_wire_decode``'s oracle verbatim:
     a green row here is execution evidence for the cluster decode path
     (reference hot loop protobuf.rb:212-218)."""
     enc_df = PW.encode_turn_wire(_good_flat(spark, sf_dir))
@@ -960,6 +959,16 @@ def pb2_wire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _wire_roundtrip(df: DataFrame, msg, message: str, registry=None,
+                    proto_version: int = 3, impl: str = "arrow") -> DataFrame:
+    """``msg`` (a struct Column shaped like ``message``) -> real wire bytes
+    in ``payload`` (generic encoder) -> registry-typed ``decoded`` struct
+    (generic decoder); the fixture queries project from that struct."""
+    enc_df = PW.wire_encode(df, msg, message, registry, proto_version)
+    return PW.decode_message_wire(enc_df, message, registry=registry,
+                                  proto_version=proto_version, impl=impl)
+
+
 @query(
     "pb_wire_uint64_bytes",
     """
@@ -978,17 +987,16 @@ def pb_wire_uint64_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     full unsigned range through encode, varint decode, and the result;
     the driver comparison is done on the STRING rendering because pandas
     collapses DuckDB DECIMAL(20,0) to float64 (lossy above 2^53)."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
+    e = F.col("event_id")
+    msg = F.struct(
         F.expr("CAST('9223372036854775808' AS DECIMAL(20,0)) + event_id")
-        .cast("decimal(20,0)").alias("id_dec"),
-        (F.col("event_id") % 100).cast("bigint").alias("response_code"),
-        F.unhex(F.substring(F.md5(F.col("event_id").cast("string")), 1, 16))
-        .alias("payload_bin"),
+        .cast("decimal(20,0)").alias("id"),
+        (e % 100).cast("bigint").alias("response_code"),
+        F.unhex(F.substring(F.md5(e.cast("string")), 1, 16)).alias("payload"),
     )
-    out = PW.dns_roundtrip(ev)
+    ev = load_table(spark, sf_dir, "events").select("event_id")
     d = F.col("decoded")
-    return out.select(
+    return _wire_roundtrip(ev, msg, "dns_message").select(
         "event_id",
         d["id"].cast("string").alias("id"),
         d["response_code"].alias("response_code"),
@@ -1020,18 +1028,26 @@ def pb2_wire_repeated_enum(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpacked wire size: 2 bytes/enum elem * 2 + 2 bytes/bool * 3 + 2 for
     least_liked (0 when its code is 0: scalar default omitted) + 5 for the
     3-char version string."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        (F.col("event_id") % 7).cast("int").alias("c1"),
-        ((F.col("event_id") + 3) % 7).cast("int").alias("c2"),
-        (F.col("event_id") % 2 == 0).alias("b1"),
-        (F.col("event_id") % 3 == 0).alias("b2"),
-        F.lit(True).alias("b3"),
-        ((F.col("event_id") + 5) % 7).cast("int").alias("least_liked"),
-        F.concat(F.lit("1."), (F.col("event_id") % 4).cast("string"))
-        .alias("version"),
+    e = F.col("event_id")
+    msg = F.struct(
+        F.array((e % 7).cast("int"), ((e + 3) % 7).cast("int"))
+        .alias("favourite_colours"),
+        F.array(e % 2 == 0, e % 3 == 0, F.lit(True)).alias("booleantest"),
+        ((e + 5) % 7).cast("int").alias("least_liked"),
+        F.concat(F.lit("1."), (e % 4).cast("string")).alias("version"),
     )
-    return PW.colour_roundtrip(ev).drop("error")
+    ev = load_table(spark, sf_dir, "events").select("event_id")
+    d = F.col("decoded")
+    return _wire_roundtrip(ev, msg, "colour_testcase", proto_version=2).select(
+        "event_id",
+        F.length("payload").alias("n_bytes"),
+        F.array_join(d["favourite_colours"].cast("array<string>"), ",")
+        .alias("colours_csv"),
+        F.array_join(d["booleantest"].cast("array<int>")
+                     .cast("array<string>"), ",").alias("bools_csv"),
+        d["least_liked"].alias("least_liked"),
+        d["version"].alias("version"),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1071,24 +1087,26 @@ def pb_wire_nested_repeated(spark: SparkSession, sf_dir: str) -> DataFrame:
     enum symbolization inside arrays, proto3 defaults for omitted scalars
     (age 0 / fur code 0 -> 'UNDEFINED'). The oracle reconstructs the expected
     decode independently from the generator arithmetic."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.concat(F.lit("u"), F.col("event_id").cast("string")).alias("u_name"),
-        (F.col("event_id") % 30).cast("int").alias("u_age"),
-        (F.col("event_id") % 7).cast("int").alias("u_fur"),
-        F.array((F.col("event_id") % 7).cast("int"),
-                ((F.col("event_id") + 1) % 7).cast("int")).alias("u_favc"),
-        F.array((F.col("event_id") % 10).cast("int"),
-                (F.col("event_id") % 100).cast("int"),
-                F.lit(150)).alias("u_favn"),
-        (F.col("event_id") % 2 == 0).alias("u_peg"),
-        F.concat(F.lit("m"), F.col("event_id").cast("string")).alias("m_name"),
-        (F.col("event_id") % 30 + 20).cast("int").alias("m_age"),
-        ((F.col("event_id") + 3) % 7).cast("int").alias("m_fur"),
+    e = F.col("event_id")
+    msg = F.struct(
+        F.concat(F.lit("u"), e.cast("string")).alias("name"),
+        (e % 30).cast("int").alias("age"),
+        (e % 7).cast("int").alias("fur_colour"),
+        F.array((e % 7).cast("int"), ((e + 1) % 7).cast("int"))
+        .alias("favourite_colours"),
+        F.array((e % 10).cast("int"), (e % 100).cast("int"), F.lit(150))
+        .alias("favourite_numbers"),
+        (e % 2 == 0).alias("is_pegasus"),
+        F.struct(
+            F.concat(F.lit("m"), e.cast("string")).alias("name"),
+            (e % 30 + 20).cast("int").alias("age"),
+            ((e + 3) % 7).cast("int").alias("fur_colour"),
+        ).alias("mother"),
     )
-    out = PW.unicorn_roundtrip(ev)
+    ev = load_table(spark, sf_dir, "events").select("event_id")
     d = F.col("decoded")
-    return out.select(
+    m = d["mother"]
+    return _wire_roundtrip(ev, msg, "unicorn").select(
         "event_id",
         d["name"].alias("name"), d["age"].alias("age"),
         d["fur_colour"].alias("fur_colour"),
@@ -1096,9 +1114,9 @@ def pb_wire_nested_repeated(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join(d["favourite_numbers"].cast("array<string>"), ",")
         .alias("favourite_numbers"),
         d["is_pegasus"].alias("is_pegasus"),
-        d["mother_name"].alias("mother_name"),
-        d["mother_age"].alias("mother_age"),
-        d["mother_fur"].alias("mother_fur"),
+        m["name"].alias("mother_name"),
+        m["age"].alias("mother_age"),
+        m["fur_colour"].alias("mother_fur"),
     )
 
 
@@ -1160,23 +1178,22 @@ FROM events
 
 def _map_entries_frame(spark: SparkSession, sf_dir: str,
                        impl: str = "arrow") -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.concat(F.lit("c"), F.col("event_id").cast("string")).alias("c_name"),
-        F.array(F.lit("home"), F.lit("work")).alias("c_labels"),
-        F.array((F.col("event_id") % 1000).cast("int"),
-                (F.col("event_id") % 97).cast("int")).alias("c_numbers"),
+    e = F.col("event_id")
+    msg = F.struct(
+        F.concat(F.lit("c"), e.cast("string")).alias("name"),
+        F.create_map(F.lit("home"), (e % 1000).cast("int"),
+                     F.lit("work"), (e % 97).cast("int"))
+        .alias("phone_numbers"),
     )
-    out = PW.contact_roundtrip(ev, impl=impl)
+    ev = load_table(spark, sf_dir, "events").select("event_id")
     d = F.col("decoded")
-    exploded = out.select(
+    return _wire_roundtrip(ev, msg, "contact", impl=impl).select(
         "event_id", d["name"].alias("name"),
-        F.explode(d["phones"]).alias("ph"),
-    )
-    return exploded.select(
+        F.explode(d["phone_numbers"]).alias("ph"),
+    ).select(
         "event_id", "name",
-        F.col("ph")["label"].alias("label"),
-        F.col("ph")["number"].alias("number"),
+        F.col("ph")["key"].alias("label"),
+        F.col("ph")["value"].alias("number"),
     )
 
 
@@ -1194,12 +1211,32 @@ def pb_wire_map_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pb_wire_map_entries_jvmdyn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME proto3 map decode as ``pb_wire_map_entries``, forced through
     the vendored JVM ``DynamicMessage`` harness (round-6 verdict item 3:
-    jvm_dynamic past flat messages). ``WireDecodeRow`` now walks maps —
+    jvm_dynamic past flat messages). ``WireDecodeRow`` walks maps —
     entries collapsed last-wins in first-seen key order, exactly a Python
-    dict built in wire order — and the label sort happens in pure Column
-    ops (``array_sort``). Shares the original's oracle verbatim: a green
-    row here is execution evidence for the nested JVM decode path."""
+    dict built in wire order — into the same registry-typed struct the
+    Arrow impl returns, so both share one projection. Shares the original's
+    oracle verbatim: a green row here is execution evidence for the nested
+    JVM decode path."""
     return _map_entries_frame(spark, sf_dir, impl="jvm_dynamic")
+
+
+def _directory_msg(e):
+    """directory -> two contacts -> map<string,int32> phones, from the
+    event id (shared by the fixed-registry and schema-file queries)."""
+    def contact(prefix, home, work):
+        return F.struct(
+            F.concat(F.lit(prefix), e.cast("string")).alias("name"),
+            F.create_map(F.lit("home"), home.cast("int"),
+                         F.lit("work"), work.cast("int"))
+            .alias("phone_numbers"),
+        )
+
+    return F.struct(
+        F.concat(F.lit("dir"), (e % 10).cast("string")).alias("scope"),
+        F.array(contact("ca", e % 1000, e % 97),
+                contact("cb", (e + 7) % 1000, (e * 3) % 97))
+        .alias("contacts"),
+    )
 
 
 @query(
@@ -1225,33 +1262,21 @@ def pb_wire_directory(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated-top-level pattern (spec/helpers/pb3/events_pb.rb:7-16) at full
     nesting depth: directory -> repeated contact -> map<string,int32>, three
     levels of length-delimited framing. Decoded structure is double-exploded
-    to scalar rows (position-pinned contacts, label-sorted map entries)."""
-    e = F.col("event_id")
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.concat(F.lit("dir"), (e % 10).cast("string")).alias("scope"),
-        F.array(F.concat(F.lit("ca"), e.cast("string")),
-                F.concat(F.lit("cb"), e.cast("string"))).alias("c_names"),
-        F.array(F.array(F.lit("home"), F.lit("work")),
-                F.array(F.lit("home"), F.lit("work"))).alias("c_labels"),
-        F.array(
-            F.array((e % 1000).cast("int"), (e % 97).cast("int")),
-            F.array(((e + 7) % 1000).cast("int"), ((e * 3) % 97).cast("int")),
-        ).alias("c_numbers"),
-    )
-    out = PW.directory_roundtrip(ev)
-    d = F.col("decoded")
-    contacts = out.select(
-        "event_id", F.posexplode(d["contacts"]).alias("c_pos", "c")
+    to scalar rows (position-pinned contacts, map entries)."""
+    ev = load_table(spark, sf_dir, "events").select("event_id")
+    msg = _directory_msg(F.col("event_id"))
+    contacts = _wire_roundtrip(ev, msg, "directory").select(
+        "event_id", F.posexplode(F.col("decoded")["contacts"])
+        .alias("c_pos", "c")
     )
     return contacts.select(
         "event_id", "c_pos",
         F.col("c")["name"].alias("name"),
-        F.explode(F.col("c")["phones"]).alias("ph"),
+        F.explode(F.col("c")["phone_numbers"]).alias("ph"),
     ).select(
         "event_id", "c_pos", "name",
-        F.col("ph")["label"].alias("label"),
-        F.col("ph")["number"].alias("number"),
+        F.col("ph")["key"].alias("label"),
+        F.col("ph")["value"].alias("number"),
     )
 
 
@@ -1290,26 +1315,57 @@ def pb_schema_multifile_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     except SchemaRegistryError:
         pass
     reg = register_codec("directory", include_path=[contact, directory])
-    e = F.col("event_id")
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.concat(F.lit("dir"), (e % 10).cast("string")).alias("scope"),
-        F.array(F.concat(F.lit("ca"), e.cast("string")),
-                F.concat(F.lit("cb"), e.cast("string"))).alias("c_names"),
-        F.array(F.array(F.lit("home"), F.lit("work")),
-                F.array(F.lit("home"), F.lit("work"))).alias("c_labels"),
-        F.array(
-            F.array((e % 1000).cast("int"), (e % 97).cast("int")),
-            F.array(((e + 7) % 1000).cast("int"), ((e * 3) % 97).cast("int")),
-        ).alias("c_numbers"),
-    )
-    out = PW.directory_roundtrip(ev, registry=reg)
+    ev = load_table(spark, sf_dir, "events").select("event_id")
+    msg = _directory_msg(F.col("event_id"))
     d = F.col("decoded")
-    return out.select(
-        "event_id", F.col("scope"),
+    return _wire_roundtrip(ev, msg, "directory", registry=reg).select(
+        "event_id", d["scope"].alias("scope"),
         F.posexplode(d["contacts"]).alias("c_pos", "c"),
     ).select(
         "event_id", "scope", "c_pos", F.col("c")["name"].alias("name"),
+    )
+
+
+def _rum_frame(ev: DataFrame) -> DataFrame:
+    """Flat RUM columns (hdr_ts, sender, version, ..., ts_str) -> one
+    akamai_rum message each -> wire -> decoded projection, plus the wire
+    size ``n_bytes`` and the dead-letter ``error``."""
+    c = F.col
+    msg = F.struct(
+        F.struct(c("hdr_ts").alias("unix_timestamp"),
+                 c("sender").alias("sender_id")).alias("header"),
+        "version", "url", "session_id", "locale",
+        F.struct(c("ua_family").alias("family"), c("ua_major").alias("major"),
+                 c("ua_minor").alias("minor"), c("ua_os").alias("os"))
+        .alias("user_agent"),
+        F.struct(c("geo_cc").alias("cc"), c("geo_city").alias("city"),
+                 c("geo_lat").alias("lat"), c("geo_lon").alias("lon"),
+                 c("geo_ovr").alias("ovr")).alias("geo"),
+        F.struct("t_resp", "fid", "fcp", "tti", "ttvr", "longtasks")
+        .alias("timers"),
+        "page_group",
+        F.array("ctest1", "ctest2").alias("active_ctests"),
+        F.struct(c("dom_script").alias("script"), c("dom_ext").alias("ext"),
+                 c("dom_ln").alias("ln")).alias("dom"),
+        "domain", c("ts_str").alias("timestamp"),
+    )
+    d = c("decoded")
+    h, ua, geo, tm = d["header"], d["user_agent"], d["geo"], d["timers"]
+    return _wire_roundtrip(ev, msg, "akamai_rum").select(
+        "event_id",
+        F.length("payload").cast("long").alias("n_bytes"),
+        h["unix_timestamp"].alias("hdr_ts"), h["sender_id"].alias("sender"),
+        d["version"].alias("version"), d["url"].alias("url"),
+        d["session_id"].alias("session_id"), d["locale"].alias("locale"),
+        ua["family"].alias("ua_family"),
+        ua["major"].cast("double").alias("ua_major"),
+        geo["cc"].alias("geo_cc"), geo["lat"].cast("double").alias("geo_lat"),
+        geo["ovr"].alias("geo_ovr"),
+        tm["fcp"].alias("fcp"), tm["tti"].alias("tti"),
+        tm["longtasks"].cast("double").alias("longtasks"),
+        F.array_join(d["active_ctests"], ",").alias("ctests"),
+        d["dom"]["script"].alias("dom_script"), d["domain"].alias("domain"),
+        d["error"].alias("error"),
     )
 
 
@@ -1388,8 +1444,7 @@ def pb_wire_rum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("d"), (e % 30).cast("string")).alias("domain"),
         F.lit("2026-01-01T00:00:00").alias("ts_str"),
     )
-    out = PW.akamai_rum_roundtrip(ev)
-    return out.drop("n_bytes", "error")  # n_bytes is pytest evidence
+    return _rum_frame(ev).drop("n_bytes", "error")  # n_bytes: pytest evidence
 
 
 _FLOAT_DOUBLE_ORACLE = """
@@ -1412,36 +1467,49 @@ FROM events
 
 
 def _float_double_frame(spark: SparkSession, sf_dir: str,
-                        impl: str = "scalar") -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.concat(F.lit("uuid-"), F.col("event_id").cast("string"))
-        .alias("uuid"),
-        (F.col("event_id") % 2).cast("int").alias("status"),
-        F.when(F.col("event_id") % 50 == 0, F.lit(0.0))
-        .otherwise(F.col("event_id") * 0.001 + 0.5).alias("latency"),
-        F.concat(F.lit("10.0.0."), (F.col("event_id") % 256).cast("string"))
-        .alias("ip"),
-        F.concat(F.lit("fam"), (F.col("event_id") % 5).cast("string"))
-        .alias("ua_family"),
-        F.when(F.col("event_id") % 40 == 0, F.lit(0.0))
-        .otherwise((F.col("event_id") % 100).cast("float")
-                   + F.lit(0.25).cast("float"))
-        .cast("float").alias("ua_major"),
-        (F.col("event_id") * 0.1).cast("float").alias("ua_minor"),
-        F.concat(F.lit("os"), (F.col("event_id") % 3).cast("string"))
-        .alias("ua_os"),
+                        impl: str = "arrow") -> DataFrame:
+    e = F.col("event_id")
+    probe = F.struct(
+        F.concat(F.lit("uuid-"), e.cast("string")).alias("uuid"),
+        F.struct(
+            (e % 2).cast("int").alias("status"),
+            F.when(e % 50 == 0, F.lit(0.0))
+            .otherwise(e * 0.001 + 0.5).alias("latency"),
+            F.concat(F.lit("10.0.0."), (e % 256).cast("string")).alias("ip"),
+        ).alias("task"),
     )
-    out = PW.probe_ua_roundtrip(ev, impl=impl)
-    d = F.col("decoded")
+    ua = F.struct(
+        F.concat(F.lit("fam"), (e % 5).cast("string")).alias("family"),
+        F.when(e % 40 == 0, F.lit(0.0))
+        .otherwise((e % 100).cast("float") + F.lit(0.25).cast("float"))
+        .cast("float").alias("major"),
+        (e * 0.1).cast("float").alias("minor"),
+        F.concat(F.lit("os"), (e % 3).cast("string")).alias("os"),
+    )
+    ev = load_table(spark, sf_dir, "events").select("event_id")
+    enc_df = PW.wire_encode(ev, probe, "probe_result") \
+        .withColumnRenamed("payload", "probe_payload")
+    enc_df = PW.wire_encode(enc_df, ua, "user_agent") \
+        .withColumnRenamed("payload", "ua_payload")
+    if impl == "vector":
+        udf = PW._make_probe_ua_decode_udf(PW.default_registry())
+        v = udf(F.col("probe_payload"), F.col("ua_payload"))
+        out = enc_df.withColumn("v", v)
+        p = t = u = F.col("v")
+    else:
+        out = PW.decode_message_wire(enc_df, "probe_result", "probe_payload") \
+            .withColumnRenamed("decoded", "p")
+        out = PW.decode_message_wire(out, "user_agent", "ua_payload")
+        p, u = F.col("p"), F.col("decoded")
+        t = p["task"]
     return out.select(
         "event_id",
-        d["uuid"].alias("uuid"), d["status"].alias("status"),
-        d["latency"].alias("latency"), d["ip"].alias("ip"),
-        d["family"].alias("family"),
-        d["major"].cast("double").alias("major_d"),
-        d["minor"].cast("double").alias("minor_d"),
-        d["os"].alias("os"),
+        p["uuid"].alias("uuid"), t["status"].alias("status"),
+        t["latency"].alias("latency"), t["ip"].alias("ip"),
+        u["family"].alias("family"),
+        u["major"].cast("double").alias("major_d"),
+        u["minor"].cast("double").alias("minor_d"),
+        u["os"].alias("os"),
     )
 
 
@@ -1464,7 +1532,7 @@ def pb_wire_float_double_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     record-transposed walker — its round-7 one-nesting-level extension:
     probe_result.task (singular nested message) decodes in a recursive
     vector pass over sub-slices of the same batch buffer, and the fixed32
-    floats / fixed64 doubles decode via byte gathers instead of the scalar
+    floats / fixed64 doubles decode via byte gathers instead of py_decode's
     struct.unpack loop. Shares pb_wire_float_double's oracle verbatim; a
     green row is driver evidence for the nested vector path (parity is also
     hypothesis-fuzzed in tests/test_wire_property.py)."""
@@ -1484,31 +1552,38 @@ FROM events
 """
 
 
+def _dns_questions_msg(e):
+    """dns_message with id ``e`` and two questions per message; qtype and
+    qclass hit 0 (omitted on the wire, re-emitted as proto3 defaults)."""
+    def question(name, qtype, qclass):
+        return F.struct(name.cast("binary").alias("name"),
+                        qtype.alias("qtype"), qclass.alias("qclass"))
+
+    return F.struct(
+        e.cast("decimal(20,0)").alias("id"),
+        F.array(
+            question(F.concat(F.lit("h"), e.cast("string"),
+                              F.lit(".example")),
+                     (e % 16).cast("int"), F.lit(1)),
+            question(F.concat(F.lit("alt"), e.cast("string")), F.lit(28),
+                     (e % 3).cast("int")),
+        ).alias("question"),
+    )
+
+
 def _repeated_message_frame(spark: SparkSession, sf_dir: str,
                             impl: str = "arrow") -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.col("event_id").cast("decimal(20,0)").alias("id_dec"),
-        F.array(
-            F.concat(F.lit("h"), F.col("event_id").cast("string"),
-                     F.lit(".example")),
-            F.concat(F.lit("alt"), F.col("event_id").cast("string")),
-        ).alias("q_names"),
-        F.array((F.col("event_id") % 16).cast("int"), F.lit(28))
-        .alias("q_types"),
-        F.array(F.lit(1), (F.col("event_id") % 3).cast("int"))
-        .alias("q_classes"),
-    )
-    out = PW.dns_questions_roundtrip(ev, impl=impl)
-    d = F.col("decoded")
-    exploded = out.select(
-        "event_id", F.posexplode(d["questions"]).alias("pos", "q")
-    )
-    return exploded.select(
+    ev = load_table(spark, sf_dir, "events").select("event_id")
+    msg = _dns_questions_msg(F.col("event_id"))
+    q = F.col("q")
+    return _wire_roundtrip(ev, msg, "dns_message", impl=impl).select(
+        "event_id", F.posexplode(F.col("decoded")["question"])
+        .alias("pos", "q")
+    ).select(
         "event_id", "pos",
-        F.col("q")["name"].alias("name"),
-        F.col("q")["qtype"].alias("qtype"),
-        F.col("q")["qclass"].alias("qclass"),
+        q["name"].cast("string").alias("name"),
+        q["qtype"].alias("qtype"),
+        q["qclass"].alias("qclass"),
     )
 
 
@@ -1532,8 +1607,9 @@ def pb_wire_repeated_message_jvmdyn(spark: SparkSession,
     JVM ``DynamicMessage`` harness (round-6 verdict item 3: jvm_dynamic
     past flat messages). ``WireDecodeRow`` walks the message recursively:
     repeated submessages become array<struct> with per-element proto3
-    defaults, uint64 widens to DECIMAL(20,0), bytes names re-project to
-    string via a Column cast. Shares the original's oracle verbatim."""
+    defaults, uint64 widens to DECIMAL(20,0) — the same struct the Arrow
+    impl returns, so both share one projection (bytes names cast to
+    string). Shares the original's oracle verbatim."""
     return _repeated_message_frame(spark, sf_dir, impl="jvm_dynamic")
 
 
@@ -1558,32 +1634,36 @@ def pb2_wire_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec/codecs/pb2_spec.rb:43-77 walk (``mother.mother.first_name`` — three
     generations: self -> mother -> grandmother, plus a father branch) through
     encode and back. The recursive human spec (human.pb.rb:16-17) nests as
-    length-delimited sub-messages; py_decode recurses with a depth bound."""
+    length-delimited sub-messages; the decoder unrolls it to
+    max_recursion_depth levels and py_decode recurses with that bound."""
     e = F.col("event_id")
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.concat(F.lit("hf"), e.cast("string")).alias("h_first"),
-        F.concat(F.lit("hl"), (e % 100).cast("string")).alias("h_last"),
-        (e % 80 + 1).cast("int").alias("h_age"),
-        F.concat(F.lit("mf"), e.cast("string")).alias("m_first"),
-        (e % 60 + 20).cast("int").alias("m_age"),
-        F.concat(F.lit("gm"), e.cast("string")).alias("gm_first"),
-        (e % 40 + 45).cast("int").alias("gm_age"),
-        F.concat(F.lit("ff"), e.cast("string")).alias("f_first"),
-        (e % 70 + 18).cast("int").alias("f_age"),
+
+    def person(prefix, age, *parents):
+        return F.struct(F.concat(F.lit(prefix), e.cast("string"))
+                        .alias("first_name"),
+                        *parents, age.cast("int").alias("age"))
+
+    grandma = person("gm", e % 40 + 45)
+    msg = F.struct(
+        F.concat(F.lit("hf"), e.cast("string")).alias("first_name"),
+        F.concat(F.lit("hl"), (e % 100).cast("string")).alias("last_name"),
+        person("mf", e % 60 + 20, grandma.alias("mother")).alias("mother"),
+        person("ff", e % 70 + 18).alias("father"),
+        (e % 80 + 1).cast("int").alias("age"),
     )
-    out = PW.human_lineage_roundtrip(ev)
+    ev = load_table(spark, sf_dir, "events").select("event_id")
     d = F.col("decoded")
-    return out.select(
+    m, f = d["mother"], d["father"]
+    return _wire_roundtrip(ev, msg, "human", proto_version=2).select(
         "event_id",
         d["first_name"].alias("first_name"), d["last_name"].alias("last_name"),
         d["age"].alias("age"),
-        d["mother_first"].alias("mother_first"),
-        d["mother_age"].alias("mother_age"),
-        d["grandma_first"].alias("grandma_first"),
-        d["grandma_age"].alias("grandma_age"),
-        d["father_first"].alias("father_first"),
-        d["father_age"].alias("father_age"),
+        m["first_name"].alias("mother_first"),
+        m["age"].alias("mother_age"),
+        m["mother"]["first_name"].alias("grandma_first"),
+        m["mother"]["age"].alias("grandma_age"),
+        f["first_name"].alias("father_first"),
+        f["age"].alias("father_age"),
     )
 
 
@@ -1616,21 +1696,23 @@ def pb_wire_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reconstructs the exact canonical JSON text from the generator
     arithmetic."""
     e = F.col("event_id")
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.concat(F.lit("u"), e.cast("string")).alias("user_id"),
-        F.concat(F.lit("v"), (e % 50).cast("string")).alias("s_vendor"),
-        (e % 1000).cast("long").alias("s_count"),
-        (e % 2 == 0).alias("s_active"),
-        F.concat(F.lit("a"), (e % 7).cast("string")).alias("s_tag1"),
-        F.concat(F.lit("b"), (e % 11).cast("string")).alias("s_tag2"),
-        (e % 180).cast("long").alias("s_lat"),
-        F.concat(F.lit("c"), (e % 20).cast("string")).alias("s_city"),
+    details = F.struct(
+        F.concat(F.lit("v"), (e % 50).cast("string")).alias("vendor"),
+        (e % 1000).cast("double").alias("count"),
+        (e % 2 == 0).alias("active"),
+        F.lit(None).cast("string").alias("note"),
+        F.array(F.concat(F.lit("a"), (e % 7).cast("string")),
+                F.concat(F.lit("b"), (e % 11).cast("string"))).alias("tags"),
+        F.struct((e % 180).cast("double").alias("lat"),
+                 F.concat(F.lit("c"), (e % 20).cast("string")).alias("city"))
+        .alias("geo"),
     )
-    out = PW.struct_roundtrip(ev)
+    msg = F.struct(F.concat(F.lit("u"), e.cast("string")).alias("user_id"),
+                   details.alias("details"))
+    ev = load_table(spark, sf_dir, "events").select("event_id")
     d = F.col("decoded")
-    j = d["details_json"]
-    return out.select(
+    j = d["details"]
+    return _wire_roundtrip(ev, msg, "send_json_request").select(
         "event_id",
         d["user_id"].alias("user_id"),
         j.alias("details_json"),

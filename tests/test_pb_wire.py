@@ -337,9 +337,6 @@ def test_human_depth4_dead_letters_with_depth_tag(spark):
     """Through Spark: a depth-4 Human payload in a batch dead-letters under
     DEPTH_ERROR while its depth-3 neighbors decode — the tag survives the
     Arrow UDF boundary for separate routing (config.max_recursion_depth)."""
-    import pandas as _pd
-
-    reg = default_registry()
     grandma = py_field_string(1, "Jancsi") + py_field_varint(6, 77)
     mother = (py_field_string(1, "Jane") + py_field_len(4, grandma)
               + py_field_varint(6, 42))
@@ -350,12 +347,31 @@ def test_human_depth4_dead_letters_with_depth_tag(spark):
     df = spark.createDataFrame([(bytearray(ok),), (bytearray(g3),),
                                 (bytearray(b"\xff\xff"),)],
                                "payload binary")
-    rows = df.withColumn(
-        "decoded", W._make_human_decode_udf(reg)(F.col("payload"))
-    ).select("decoded.first_name", "decoded.error").collect()
+    rows = W.decode_message_wire(df, "human", proto_version=2).select(
+        "decoded.first_name", "decoded.error").collect()
     assert rows[0]["error"] is None and rows[0]["first_name"] == "Hugo"
     assert rows[1]["error"] == W.DEPTH_ERROR
     assert rows[2]["error"] == W.WIRE_ERROR
+
+
+def test_generic_decode_dead_letters_values_outside_their_column(spark):
+    """A varint too wide for its registry-typed column (an int32 map value,
+    a uint64 id past 2^64) dead-letters its row under WIRE_ERROR instead of
+    failing the Arrow batch; the other rows decode."""
+    def contact(number):
+        entry = py_field_string(1, "home") + py_field_varint(2, number)
+        return bytearray(py_field_string(1, "c") + py_field_len(2, entry))
+
+    df = spark.createDataFrame([(0, contact(5)), (1, contact(1 << 40))],
+                               "id int, payload binary")
+    rows = W.decode_message_wire(df, "contact").orderBy("id") \
+        .select("decoded.name", "decoded.error").collect()
+    assert rows[0]["error"] is None and rows[0]["name"] == "c"
+    assert rows[1]["error"] == W.WIRE_ERROR and rows[1]["name"] is None
+    dns = spark.createDataFrame([(bytearray(py_field_varint(1, 1 << 64)),)],
+                                "payload binary")
+    assert W.decode_message_wire(dns, "dns_message") \
+        .first()["decoded"]["error"] == W.WIRE_ERROR
 
 
 def test_repeated_message_decode_py():
@@ -410,10 +426,8 @@ def test_rum_wide_message_bytes_exist(spark):
 
     rows = pb_wire_rum(spark, SF_DIR).limit(5).collect()
     assert all(r["ua_major"] == (r["event_id"] % 100) + 0.25 for r in rows)
-    # the query drops n_bytes; probe byte evidence via the raw operator
-    from logstash_codec_protobuf_spark.operators.pb_wire import (
-        akamai_rum_roundtrip,
-    )
+    # the query drops n_bytes; probe byte evidence via its projection
+    from logstash_codec_protobuf_spark.queries import _rum_frame
     import pyspark.sql.functions as SF
 
     probe = spark.range(3).select(
@@ -437,7 +451,7 @@ def test_rum_wide_message_bytes_exist(spark):
         SF.lit(7).alias("dom_ext"), SF.lit(8).alias("dom_ln"),
         SF.lit("d").alias("domain"), SF.lit("2026").alias("ts_str"),
     )
-    r = akamai_rum_roundtrip(probe).first()
+    r = _rum_frame(probe).first()
     assert r["n_bytes"] > 80 and r["error"] is None
     assert r["geo_lat"] == 1.5 and r["geo_ovr"] is True
 
@@ -697,25 +711,10 @@ def test_jvm_row_schema_guards():
         W._jvm_row_schema(reg.messages["unicorn"], 3)
 
 
-def test_jvm_json_foil_parity(spark):
-    """The canonical-JSON variant (impl='jvm_json') must produce the same
-    decoded struct as the Row path on real payloads."""
-    _require_jvm_dynamic(spark)
-    enc = W.encode_turn_wire(_flat(spark)).limit(300).cache()
-    try:
-        cols = [F.col("decoded")[f.name].alias(f.name)
-                for f in W.TURN_WIRE_DECODED]
-        row = W.decode_turn_wire(enc, impl="jvm_dynamic").select(*cols)
-        js = W.decode_turn_wire(enc, impl="jvm_json").select(*cols)
-        assert sorted(map(tuple, row.collect())) == \
-            sorted(map(tuple, js.collect()))
-    finally:
-        enc.unpersist()
-
 # ---------------------------------------------------------------------------
 # forward-compat enum contract (round-7): codes int32-truncate like
 # protobuf-java; an UNREGISTERED pb3 code decodes to its decimal string —
-# identical across arrow / arrow_scalar / jvm_dynamic / jvm_json, never a
+# identical across arrow / arrow_scalar / jvm_dynamic, never a
 # batch crash, never a dead-letter
 # ---------------------------------------------------------------------------
 
@@ -757,7 +756,7 @@ def test_enum_unknown_code_parity_all_impls(spark):
     df = _enum_probe_frame(spark)
     impls = ["arrow", "arrow_scalar"]
     if W.jvm_dynamic_available(spark):
-        impls += ["jvm_dynamic", "jvm_json"]
+        impls += ["jvm_dynamic"]
     for pv, want in ((3, ["PINK", "99", "-1"]), (2, [2, 99, -1])):
         for impl in impls:
             out = (W.decode_turn_wire(df, impl=impl, proto_version=pv)
@@ -774,16 +773,19 @@ def test_enum_unknown_code_parity_all_impls(spark):
 # ---------------------------------------------------------------------------
 
 def _dns_frame(spark, n=50):
-    return spark.range(n).select(
+    from logstash_codec_protobuf_spark.queries import _dns_questions_msg
+
+    df = spark.range(n).select(
         F.col("id").alias("event_id"),
-        F.col("id").cast("decimal(20,0)").alias("id_dec"),
-        F.array(F.concat(F.lit("h"), F.col("id").cast("string"),
-                         F.lit(".example")),
-                F.concat(F.lit("alt"), F.col("id").cast("string"))
-                ).alias("q_names"),
-        F.array((F.col("id") % 16).cast("int"), F.lit(28)).alias("q_types"),
-        F.array(F.lit(1), (F.col("id") % 3).cast("int")).alias("q_classes"),
+        _dns_questions_msg(F.col("id")).alias("msg"),
     )
+    return W.wire_encode(df, "msg", "dns_message")
+
+
+def _arrow_and_jvm(enc, message):
+    return [W.decode_message_wire(enc, message, impl=impl)
+            .select("event_id", "decoded")
+            for impl in ("arrow", "jvm_dynamic")]
 
 
 def test_jvm_dynamic_repeated_message_parity(spark):
@@ -794,12 +796,10 @@ def test_jvm_dynamic_repeated_message_parity(spark):
     DECIMAL(20,0)."""
     if not W.jvm_dynamic_available(spark):
         pytest.skip("shaded protobuf runtime unavailable")
-    df = _dns_frame(spark)
-    a = W.dns_questions_roundtrip(df).select("event_id", "decoded")
-    j = W.dns_questions_roundtrip(df, impl="jvm_dynamic").select(
-        "event_id", "decoded")
+    a, j = _arrow_and_jvm(_dns_frame(spark), "dns_message")
     # nullability flags differ (pandas_udf marks all nullable) — types must match
     assert a.schema.simpleString() == j.schema.simpleString()
+    assert a.schema["decoded"].dataType == j.schema["decoded"].dataType
     assert sorted(map(repr, a.collect())) == sorted(map(repr, j.collect()))
 
 
@@ -813,15 +813,18 @@ def test_jvm_dynamic_map_entries_parity(spark):
         pytest.skip("shaded protobuf runtime unavailable")
     df = spark.range(50).select(
         F.col("id").alias("event_id"),
-        F.concat(F.lit("c"), F.col("id").cast("string")).alias("c_name"),
-        F.array(F.lit("home"), F.lit("work")).alias("c_labels"),
-        F.array((F.col("id") % 1000).cast("int"),
-                (F.col("id") % 97).cast("int")).alias("c_numbers"),
+        F.struct(
+            F.concat(F.lit("c"), F.col("id").cast("string")).alias("name"),
+            F.map_from_arrays(
+                F.array(F.lit("home"), F.lit("work")),
+                F.array((F.col("id") % 1000).cast("int"),
+                        (F.col("id") % 97).cast("int")),
+            ).alias("phone_numbers"),
+        ).alias("msg"),
     )
-    a = W.contact_roundtrip(df).select("event_id", "decoded")
-    j = W.contact_roundtrip(df, impl="jvm_dynamic").select(
-        "event_id", "decoded")
+    a, j = _arrow_and_jvm(W.wire_encode(df, "msg", "contact"), "contact")
     assert a.schema.simpleString() == j.schema.simpleString()
+    assert a.schema["decoded"].dataType == j.schema["decoded"].dataType
     assert sorted(map(repr, a.collect())) == sorted(map(repr, j.collect()))
 
 
@@ -841,7 +844,7 @@ def test_jvm_dynamic_map_duplicate_key_last_wins(spark):
     buf = py_field_string(1, "cdup") + b"".join(
         py_field_len(2, e) for e in (entry1, entry2, entry3))
     df = spark.createDataFrame([(1, bytearray(buf))], "id int, payload binary")
-    out = W.decode_message_wire_jvm_dynamic(df, "contact").select(
+    out = W.decode_message_wire(df, "contact", impl="jvm_dynamic").select(
         "decoded").first()["decoded"]
     assert out["name"] == "cdup"
     assert [(e["key"], e["value"]) for e in out["phone_numbers"]] == [
@@ -859,7 +862,7 @@ def test_jvm_dynamic_nested_dead_letter(spark):
         pytest.skip("shaded protobuf runtime unavailable")
     df = spark.createDataFrame([(1, bytearray(b"\xff"))],
                                "id int, payload binary")
-    row = W.decode_message_wire_jvm_dynamic(df, "dns_message").first()
+    row = W.decode_message_wire(df, "dns_message", impl="jvm_dynamic").first()
     assert row["decoded"]["error"] == W.WIRE_ERROR
     assert row["decoded"]["id"] is None
     assert row["decoded"]["question"] is None

@@ -109,3 +109,23 @@ def test_fan_out_parquet_and_writeto(spark, tmp_path):
     parts = spark.sql("SHOW CREATE TABLE fanout_v2_test").first()[0]
     assert "PARTITIONED BY (sink)" in parts
     spark.sql("DROP TABLE fanout_v2_test")
+
+
+def test_combo_density_sizes_hive_nested_input(tmp_path, monkeypatch):
+    """The pre-write salt density counts every parquet file under the input
+    directory: a Hive-nested input (``dt=1/part-*.parquet``) over 64 MB
+    picks the wide density, a small flat one the narrow density."""
+    from logstash_codec_protobuf_spark.plans.pipeline import (
+        _combos_per_partition,
+    )
+
+    monkeypatch.delenv("SPARK_GRAFT_COMBOS_PER_PARTITION", raising=False)
+    nested = tmp_path / "nested" / "dt=1"
+    nested.mkdir(parents=True)
+    with open(nested / "part-0.parquet", "wb") as f:
+        f.truncate(65 << 20)  # sparse: no real disk use
+    flat = tmp_path / "flat"
+    flat.mkdir()
+    (flat / "part-0.parquet").write_bytes(b"x" * 1024)
+    assert _combos_per_partition("unused", str(tmp_path / "nested")) == 4
+    assert _combos_per_partition("unused", str(flat)) == 1

@@ -199,17 +199,33 @@ def test_struct_roundtrip_property(details):
     raw = py_field_string(1, "u") + py_field_len(2, py_struct(details))
     d = W.py_decode(raw, REG, "send_json_request")
     got = json.loads(d["details"])
+    assert got == _json_canon(details)
 
-    def canon(v):
-        if isinstance(v, bool) or v is None or isinstance(v, str):
-            return v
-        if isinstance(v, (int, float)):
-            return float(v)
-        if isinstance(v, list):
-            return [canon(x) for x in v]
-        return {k: canon(x) for k, x in v.items()}
 
-    assert got == canon(details)
+def _json_canon(v):
+    """A JSON value as it comes back from a Struct: numbers as doubles."""
+    if isinstance(v, bool) or v is None or isinstance(v, str):
+        return v
+    if isinstance(v, (int, float)):
+        return float(v)
+    if isinstance(v, list):
+        return [_json_canon(x) for x in v]
+    return {k: _json_canon(x) for k, x in v.items()}
+
+
+@given(st.text(max_size=8),
+       st.dictionaries(st.text(max_size=8), json_values, max_size=5))
+@settings(max_examples=200, deadline=None)
+def test_generic_encoder_struct_roundtrip(user_id, details):
+    """py_encode's google.protobuf.Struct field -> py_decode reproduces
+    the JSON value (numbers as doubles), next to a plain string field."""
+    import json
+
+    raw = W.py_encode({"user_id": user_id, "details": details}, REG,
+                      "send_json_request")
+    d = W.py_decode(raw, REG, "send_json_request")
+    assert d["user_id"] == user_id
+    assert json.loads(d["details"]) == _json_canon(details)
 
 
 @given(st.text(max_size=10), st.text(max_size=10), st.text(max_size=10),

@@ -6,13 +6,15 @@ failures become substitute events tagged `_protobufdecodefailure`
 `tools.sink` dictionary column, with the dead-letter sink as one more route.
 
 Scale design (north_rule): the routed write is the job's one big shuffle, so it
-is made EXPLICIT — ``repartition(route_partitions, "sink", salt)`` right before
-the write. The salt spreads each sink's rows over many tasks (a sink is a
-low-cardinality hot key by construction; without the salt all of sink_b lands in
-one task at 100 TB). `partitionBy("sink")` on the writer then lays files out per
-sink directory. A single ``persist`` lets good/dead flows share the parse stage
-instead of re-reading the source per sink (single-pass multi-sink fan-out,
-SURVEY.md §4).
+is made EXPLICIT — ``probe_repartition`` right before the write. It salts each
+sink group into combos and places the combos on partitions round-robin through
+probe integers, so a sink's rows spread over many tasks (a sink is a
+low-cardinality hot key by construction; unsalted, all of sink_b lands in one
+task at 100 TB) and each task writes a bounded number of files.
+`partitionBy("sink")` on the writer then lays files out per sink directory.
+Good and failed rows get their sink in one projection (``route_all``), so the
+fan-out scans the source once and needs no persist (single-pass multi-sink
+fan-out, SURVEY.md §4).
 """
 
 from __future__ import annotations

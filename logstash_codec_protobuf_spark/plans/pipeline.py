@@ -10,13 +10,13 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..config import CodecConfig, DEAD_LETTER_SINK
 from ..operators import aggregate as agg
 from ..operators.enrich import enrich
 from ..operators.parse import parse_turns, split_dead_letter
-from ..operators.route import route_all
+from ..operators.route import probe_repartition, route_all
 from ..sources.transcripts import transcripts_df
 from .checkpoint import CheckpointManifest
 
@@ -133,30 +133,42 @@ def run_pipeline(
         # parse once, not once per wave: the wave filters then hit cached rows.
         # (Resume across PROCESSES still prunes completed buckets at the scan.)
         routed_all = routed_all.persist()
+    n = int(cfg.route_partitions
+            or spark.conf.get("spark.sql.shuffle.partitions"))
+    k = len(cfg.sinks)
+    # wave-invariant: each row's (bucket, sink) group index, built once and
+    # bound per wave as column _g, so the wave metric below is one SQL
+    # string over integers (no sink name is spliced into SQL). A sink
+    # outside cfg.sinks has no position; it gets group -1, which no wave
+    # counts and whose rows the pre-write repartition still places (as a
+    # group of their own).
+    sink_pos = F.array_position(
+        F.array(*[F.lit(s) for s in cfg.sinks]), F.col("sink")) - F.lit(1)
+    group_idx = F.when(sink_pos >= 0, F.col("_bucket") * F.lit(k) + sink_pos) \
+        .otherwise(F.lit(-1))
     try:
-        n = int(cfg.route_partitions
-                or spark.conf.get("spark.sql.shuffle.partitions"))
         for wi, wave in enumerate(waves):
             if fail_after_waves is not None and wi >= fail_after_waves:
                 raise RuntimeError("simulated kill")
             t0 = time.time()
-            wave_df = routed_all.filter(F.col("_bucket").isin(wave))
+            wave_df = routed_all.filter(
+                F.expr(f"_bucket IN ({', '.join(map(str, wave))})")
+            ).withColumn("_g", group_idx)
             # per-(bucket, sink) counts via the observe API: collected DURING
             # the write action, no post-write read-back (which doubled the
             # write-path IO at scale). Spark's file commit protocol stages
             # task output and commits atomically with the action, so on a
             # successful write the observed counts ARE the landed rows; a
             # failed action raises before the manifest entry commits. The
-            # metric set is bounded: wave_size buckets x |cfg.sinks|.
-            from pyspark.sql import Observation
-
+            # wave observes ONE array-valued aggregate, slot i*k + j holding
+            # the rows of (wave[i], cfg.sinks[j]); it is built from one SQL
+            # string, so its driver cost does not grow with wave_size x k
+            # (a py4j-built Column per (bucket, sink) costs ~75 round trips).
+            groups = [b * k + j for b in wave for j in range(k)]
             obs = Observation(f"wave_{wi}")
-            metric_exprs = [
-                F.count_if((F.col("_bucket") == b) & (F.col("sink") == s))
-                .alias(f"c_{b}_{s}")
-                for b in wave for s in cfg.sinks
-            ]
-            wave_df = wave_df.observe(obs, *metric_exprs)
+            wave_df = wave_df.observe(obs, F.expr(
+                "array(" + ", ".join(f"count_if(_g = {g})" for g in groups)
+                + ")").alias("counts"))
             # explicit pre-write repartition, DETERMINISTICALLY balanced
             # (round-7, round-6 verdict item 1 — the 8->32 e2e gap): the
             # old repartition(n, _bucket, sink, salt) had two failure
@@ -170,25 +182,18 @@ def run_pipeline(
             #    combos to partitions round-robin via driver-computed
             #    probe integers: balance and files-per-task both hold by
             #    construction at any parallelism.
-            from ..operators.route import probe_repartition
-
-            sink_pos = F.array_position(
-                F.array(*[F.lit(s) for s in cfg.sinks]), F.col("sink")
-            ) - F.lit(1)
-            group_idx = (F.col("_bucket") * F.lit(len(cfg.sinks))
-                         + sink_pos)
             (
-                probe_repartition(wave_df, n, group_idx,
-                                  len(wave) * len(cfg.sinks),
+                probe_repartition(wave_df, n, F.col("_g"), len(groups),
                                   combos_per_partition=cpp)
+                .drop("_g")
                 .write.mode("append").partitionBy("_bucket", "sink")
                 .parquet(data_dir)
             )
-            got = obs.get  # available once the write action completed
+            counts = obs.get["counts"]  # available once the write completed
             dt = time.time() - t0
-            for b in wave:
-                sinks = {s: int(got[f"c_{b}_{s}"]) for s in cfg.sinks
-                         if got[f"c_{b}_{s}"]}
+            for i, b in enumerate(wave):
+                sinks = {s: int(c) for s, c in
+                         zip(cfg.sinks, counts[i * k:(i + 1) * k]) if c}
                 manifest.complete(b, {
                     "sinks": sinks,
                     "rows": int(sum(sinks.values())),

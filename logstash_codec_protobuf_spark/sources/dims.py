@@ -12,7 +12,7 @@ oracles match exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 from ..schema import default_registry
 
@@ -34,8 +34,9 @@ TOOLS_ROWS = [
 ]
 
 
-# per-session cache: building + broadcasting a dim costs a Python->JVM
-# round-trip (~100ms); pipelines call enrich() per query, so reuse the frame.
+# per-session cache of the dim frames. A local relation costs nothing per
+# query, so this saves only the one Arrow hand-off per dim and session (the
+# py4j calls that serialise the rows and build the relation).
 # WeakKeyDictionary keyed on the live SparkSession: entries die with the
 # session object, so stopped sessions (bench.run_scaling creates/stops many
 # per process) don't pin DataFrames or grow the cache unboundedly.
@@ -53,19 +54,35 @@ def _cached(spark: SparkSession, key: str, build) -> DataFrame:
     return per_session[key]
 
 
+def _local_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """Dictionary rows as a JVM-local relation (``LocalTableScan``).
+
+    ``createDataFrame(list)`` would parallelize the rows as a Python RDD, and
+    every query that broadcasts the dim would run Python-worker tasks to read
+    a few rows back. An Arrow table is shipped to the JVM once and planned as
+    a local relation, with the same DDL schema (types and nullability)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = T.StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
+                                 schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
 def roles_df(spark: SparkSession) -> DataFrame:
-    return _cached(spark, "roles", lambda: spark.createDataFrame(
-        ROLES_ROWS, "role string, role_group string, is_agent boolean"))
+    return _cached(spark, "roles", lambda: _local_df(
+        spark, ROLES_ROWS, "role string, role_group string, is_agent boolean"))
 
 
 def tools_df(spark: SparkSession) -> DataFrame:
-    return _cached(spark, "tools", lambda: spark.createDataFrame(
-        TOOLS_ROWS, "tool string, tool_family string, sink string"))
+    return _cached(spark, "tools", lambda: _local_df(
+        spark, TOOLS_ROWS, "tool string, tool_family string, sink string"))
 
 
 def enums_df(spark: SparkSession) -> DataFrame:
-    rows = default_registry().enum_rows()
-    return spark.createDataFrame(rows, "enum_class string, code int, name string")
+    return _local_df(spark, default_registry().enum_rows(),
+                     "enum_class string, code int, name string")
 
 
 def _values_cte(rows, cols) -> str:

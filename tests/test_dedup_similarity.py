@@ -983,3 +983,32 @@ def test_neardup_bucket_block_chunking_is_boundary_exact(spark):
     sizes = Counter(b.values())
     big = sizes.most_common(1)[0][1]
     assert big * 5 > (1 << 22) // big
+
+
+def test_neardup_null_embedding_is_dropped_like_the_oracle(spark, tmp_path):
+    """A NULL embedding scores NULL in the SQL template and never pairs, so
+    neardup_pairs drops it before the numpy kernels (np.stack used to fail
+    the whole job on it). With one planted NULL row the result equals the
+    run without that row and the DuckDB oracle over the same table."""
+    import duckdb
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    planted = emb.limit(1).select(
+        F.lit(10 ** 6).cast(emb.schema["vec_id"].dataType).alias("vec_id"),
+        F.lit(None).cast(emb.schema["embedding"].dataType).alias("embedding"),
+        *[c for c in emb.columns if c not in ("vec_id", "embedding")])
+    path = str(tmp_path / "embeddings.parquet")
+    emb.unionByName(planted).write.parquet(path)
+    dirty = spark.read.parquet(path)
+    assert dirty.filter(F.col("embedding").isNull()).count() == 1
+
+    def pairs(df):
+        return sorted(tuple(r) for r in
+                      SIM.neardup_pairs(df, threshold=0.3).collect())
+
+    got = pairs(dirty)
+    assert got and got == pairs(emb)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}/*.parquet'")
+    assert got == sorted(con.execute(
+        SIM.neardup_pairs_oracle(threshold=0.3)).fetchall())

@@ -37,6 +37,32 @@ def test_enrich_uses_broadcast_joins_only(spark, tr):
     assert "ShuffledHashJoin" not in plan
 
 
+def test_enrich_dims_are_jvm_local_relations(spark, tr):
+    """Both enrichment build sides plan as ``LocalTableScan``: a dim built
+    from a Python list is a Python RDD, and broadcasting it runs a job of
+    Python-worker tasks per query. The local relation keeps the DDL schema,
+    nullability included."""
+    from logstash_codec_protobuf_spark.sources import dims
+
+    plan = _executed(route_all(enrich(parse_turns(tr), spark,
+                                      tag_unknown=False)))
+    builds = re.findall(r"BroadcastExchange[^\n]*\n[\s:]*\+- (\w+)", plan)
+    assert builds == ["LocalTableScan", "LocalTableScan"], plan
+    assert "ExistingRDD" not in plan
+    for built, rows, ddl in (
+        (dims.roles_df(spark), dims.ROLES_ROWS,
+         "role string, role_group string, is_agent boolean"),
+        (dims.tools_df(spark), dims.TOOLS_ROWS,
+         "tool string, tool_family string, sink string"),
+        (dims.enums_df(spark), dims.default_registry().enum_rows(),
+         "enum_class string, code int, name string"),
+    ):
+        listed = spark.createDataFrame(rows, ddl)
+        assert built.schema == listed.schema
+        assert sorted(built.collect()) == sorted(listed.collect())
+        assert "LocalTableScan" in _executed(built)
+
+
 def test_route_counts_has_single_data_shuffle(spark, tr):
     """parse -> enrich -> sink-count: exactly one non-broadcast exchange (the
     partial->final aggregation); everything upstream is pipeline-fused."""
